@@ -311,6 +311,10 @@ def main() -> None:
         "loadavg_pre": load_pre,
         "loadavg_post": load_post,
         "ncpu": ncpu,
+        # the session's own core count: ncpu is the host's, which the
+        # session's master (SPARK_GRAFT_CPUS) may narrow
+        "master": spark.sparkContext.master,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
         "load_settled": load_settled,
     }
     result = {

@@ -13,6 +13,10 @@ vendor backports count):
                       dotted access)
 - ``stream_dedup_watermark`` — DataFrame.dropDuplicatesWithinWatermark
                       (Spark 3.5; streaming/dedup.py)
+- ``arrow_local_frame`` — createDataFrame(pyarrow.Table) + the classic
+                      local-data-to-Arrow converter (Spark 4.1;
+                      functions/local.py ``local_frame``, which falls back
+                      to createDataFrame(list) without it)
 - ``lateral_column_alias``, ``percentile`` etc. ride the 3.5 floor and are
   not individually probed.
 
@@ -30,6 +34,7 @@ from __future__ import annotations
 _MIN_VERSIONS = {
     "variant": "4.0",
     "stream_dedup_watermark": "3.5",
+    "arrow_local_frame": "4.1",
 }
 
 # test seam: {"feature": False} forces a probe result
@@ -53,6 +58,14 @@ def _probe(feature: str) -> bool:
         from pyspark.sql import DataFrame
 
         return hasattr(DataFrame, "dropDuplicatesWithinWatermark")
+    if feature == "arrow_local_frame":
+        try:
+            from pyspark.sql.conversion import LocalDataToArrowConversion  # noqa: F401
+            from pyspark.sql.pandas.conversion import SparkConversionMixin
+
+            return hasattr(SparkConversionMixin, "_create_from_arrow_table")
+        except ImportError:
+            return False
     raise KeyError(f"unknown feature probe {feature!r}")
 
 

@@ -572,26 +572,6 @@ def qdrant_read_record() -> RecordFn:
     return fn
 
 
-def neo4j_node_record(label: str = "Document") -> RecordFn:
-    """reference neo4j_writer.py node shape: label + properties map keyed by
-    the doc uuid."""
-
-    def fn(row: dict) -> dict | None:
-        if row.get("doc_id") is None:
-            return None
-        return {
-            "label": label,
-            "uuid": row["doc_id"],
-            "properties": {
-                "type": row.get("type"),
-                "text_representation": row.get("text_representation"),
-                "properties": row.get("properties"),
-            },
-        }
-
-    return fn
-
-
 def reconstruct_documents(
     hits: DataFrame,
     id_col: str = "doc_id",

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors.exceptions.captured import AnalysisException
 
+from sycamore_spark.functions.local import collect_bounded, local_frame
+
 
 def bm25_scores(
     df: DataFrame,
@@ -63,13 +65,14 @@ def bm25_scores(
     )
     # dl as a native per-row projection — size(split(...)) counts exactly
     # the rows the historical explode+groupBy counted (split never returns
-    # an empty array; NULL text, absent from the exploded agg, is filtered
-    # out to match), so the corpus-scale hash-agg SHUFFLE for document
-    # lengths disappears (guide §2.4; r14 — one corpus explode, not two)
-    dl = df.select(
+    # an empty array), so the corpus-scale hash-agg SHUFFLE for document
+    # lengths disappears (guide §2.4; r14 — one corpus explode, not two).
+    # NULL text, absent from the exploded agg, is filtered out BEFORE the
+    # projection: size(NULL) is NULL under ANSI but -1 without it
+    dl = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
         F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_dl"),
-    ).filter(F.col("_dl").isNotNull())
+    )
     stats = dl.agg(
         F.count(F.lit(1)).alias("_n_docs"), F.avg("_dl").alias("_avgdl")
     )
@@ -158,11 +161,12 @@ def bm25_scores_multi(
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
     )
     # dl as a native projection instead of explode+groupBy — identical
-    # values (see bm25_scores), one fewer corpus-scale shuffle
-    dl = df.select(
+    # values, NULL text filtered first (see bm25_scores), one fewer
+    # corpus-scale shuffle
+    dl = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
         F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_dl"),
-    ).filter(F.col("_dl").isNotNull())
+    )
     stats = dl.agg(F.count(F.lit(1)).alias("_n_docs"), F.avg("_dl").alias("_avgdl"))
 
     qterms = queries.select(
@@ -593,6 +597,28 @@ def bucketed_postings(
     )
 
 
+def _read_store(spark, store_dir: str, bucket_col: str):
+    """The bucketed store at ``store_dir``, or None when it holds no data:
+    never written, or every bucket dir emptied and removed by a fold
+    (Spark reports the latter as UNABLE_TO_INFER_SCHEMA). Every other read
+    failure propagates — folding into a store that exists but cannot be
+    read would rebuild the touched buckets from the delta alone and
+    overwrite the postings they held."""
+    from sycamore_spark.materialize import _hadoop_fs
+
+    try:
+        return spark.read.parquet(store_dir)
+    except AnalysisException as e:
+        cond = e.getCondition()
+        if cond == "PATH_NOT_FOUND":
+            return None
+        if cond == "UNABLE_TO_INFER_SCHEMA":
+            fs, p = _hadoop_fs(spark, f"{store_dir.rstrip('/')}/{bucket_col}=*")
+            if not fs.globStatus(p):
+                return None
+        raise
+
+
 def index_apply_changes(
     spark,
     index_dir: str,
@@ -643,12 +669,8 @@ def index_apply_changes(
         # the same probe job (r14: entry-checkpoint + dup-check jobs folded
         # into the probe; was 2 extra jobs per non-prepared fold)
         changes = changes.localCheckpoint(eager=False)
-    try:
-        store = spark.read.parquet(index_dir)
-    except AnalysisException:
-        # every bucket dir was emptied and removed: nothing old to keep —
-        # the fold rebuilds purely from the delta
-        store = None
+    # None: nothing old to keep — the fold rebuilds purely from the delta
+    store = _read_store(spark, index_dir, bucket_col)
     delta_ids = changes.select(F.col(id_col)).distinct()
     new_posts = (
         changes.filter(F.col(op_col) != delete_op)
@@ -827,10 +849,7 @@ def norms_apply_changes(
         # lazy cut, materialized by the touched-bucket probe below; the
         # dup check rides the same probe job (see index_apply_changes)
         changes = changes.localCheckpoint(eager=False)
-    try:
-        store = spark.read.parquet(norms_dir)
-    except AnalysisException:
-        store = None  # every norms bucket emptied: rebuild from the delta
+    store = _read_store(spark, norms_dir, bucket_col)  # None: rebuild from the delta
     new_norms = doc_norms(
         changes.filter(F.col(op_col) != delete_op),
         id_col=id_col, text_col=text_col,
@@ -896,6 +915,7 @@ def bm25_from_index(
     k1: float = 1.2,
     b: float = 0.75,
     k: int | None = None,
+    max_queries: int = 100_000,
 ) -> DataFrame:
     """Serve exact BM25 FROM the maintained store pair — what
     ``bm25_scores_multi`` computes from raw text, answered instead from
@@ -913,28 +933,41 @@ def bm25_from_index(
     narrow norms aggregate for the stats row (Lucene reads its norms
     file the same way; maintain a stats sidecar additively if even that
     scan matters). Returns (query_id, id_col, bm25_micros), top-``k``
-    per query when ``k`` is given (rank window: micros desc, id asc)."""
-    qterms = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+"))
-        ).alias("term"),
-    ).filter(F.col("term") != "")
-    # one query-scale collect resolves the distinct terms AND their buckets
-    # (was two jobs: a distinct-terms collect + a second collect over a
-    # driver-created frame just to evaluate pmod(xxhash64) — r13)
-    term_rows = (
-        qterms.select("term").distinct()
-        .select(
-            "term",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("_b"),
-        )
-        .collect()
+    per query when ``k`` is given (rank window: micros desc, id asc).
+
+    Query side: per the ``brute_force_topk`` contract the query frame is
+    collected to the driver in ONE job, bounded by ``max_queries``; that
+    job also computes each query's distinct terms and their buckets (with
+    the index's own hash expression), and the (query, term) rows re-enter
+    the plan as a driver-built ``LocalRelation``, so the caller's frame is
+    never scanned again."""
+    terms_of = F.filter(
+        F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+")),
+        lambda t: t != "",
     )
-    terms = sorted(r[0] for r in term_rows)
+    q_rows = collect_bounded(
+        queries.select(
+            F.col(query_id_col).alias("_qid"),
+            F.transform(terms_of, lambda t: F.struct(
+                t.alias("term"),
+                F.pmod(F.xxhash64(t), F.lit(n_buckets)).cast("int").alias("_b"),
+            )).alias("_tb"),
+        ),
+        max_queries,
+        f"bm25_from_index collects the query side to the driver; got "
+        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
+        f"the query set.",
+    )
+    term_rows = [(r["_qid"], t["term"], t["_b"]) for r in q_rows for t in r["_tb"] or ()]
+    terms = sorted({t for _, t, _ in term_rows})
     if not terms:
         raise ValueError("queries contain no terms")
-    bkts = sorted({r[1] for r in term_rows})
+    bkts = sorted({b for _, _, b in term_rows})
+    qterms = local_frame(
+        spark,
+        [(qid, t) for qid, t, _ in term_rows],
+        f"_qid {queries.schema[query_id_col].dataType.simpleString()}, term string",
+    )
     posts = (
         spark.read.parquet(index_dir)
         .filter(F.col(bucket_col).isin(bkts))     # prunes at file listing
@@ -1088,17 +1121,13 @@ def maxsim_scores(
     vec_expr = lambda t: hashing_embedding_expr(tri_text(t), dim, hash_fn=md5_hash60)  # noqa: E731
 
     qt = tok_frame(queries_df, query_id, query_text, None)
-    q_rows = (
-        qt.withColumn("_vec", vec_expr(F.col("_tok")))
-        .limit(max_query_tokens + 1)
-        .collect()
+    q_rows = collect_bounded(
+        qt.withColumn("_vec", vec_expr(F.col("_tok"))),
+        max_query_tokens,
+        f"maxsim_scores compiles the query token vectors into the plan; "
+        f"got >{max_query_tokens} (query_id, token) rows "
+        f"(max_query_tokens={max_query_tokens}). Chunk the query set.",
     )
-    if len(q_rows) > max_query_tokens:
-        raise ValueError(
-            f"maxsim_scores compiles the query token vectors into the plan; "
-            f"got >{max_query_tokens} (query_id, token) rows "
-            f"(max_query_tokens={max_query_tokens}). Chunk the query set."
-        )
     qid_type = queries_df.schema[query_id].dataType
     out_schema = (
         f"{query_id} {qid_type.simpleString()}, "
@@ -1106,7 +1135,7 @@ def maxsim_scores(
         f"rank int, maxsim_micros long"
     )
     if not q_rows:
-        return queries_df.sparkSession.createDataFrame([], out_schema)
+        return local_frame(queries_df.sparkSession, [], out_schema)
 
     # vectors once per DISTINCT doc token (the corpus vocabulary — tiny
     # next to the exploded token stream), then joined back: the HOF-heavy
@@ -1200,11 +1229,12 @@ def qlm_scores(
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
     )
     # dl as a native projection instead of explode+groupBy — identical
-    # values (see bm25_scores), one fewer corpus-scale shuffle
-    dl = df.select(
+    # values, NULL text filtered first (see bm25_scores), one fewer
+    # corpus-scale shuffle
+    dl = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
         F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_dl"),
-    ).filter(F.col("_dl").isNotNull())
+    )
     total = dl.agg(F.sum("_dl").cast("double").alias("_ctot"))
 
     qterms = queries.select(

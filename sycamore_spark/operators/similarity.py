@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sycamore_spark.functions import vectors as V
+from sycamore_spark.functions.local import collect_bounded, local_frame
 from sycamore_spark.operators.profiling import key_skew_profile
 
 
@@ -68,24 +69,20 @@ def brute_force_topk(
         StructField("rank", IntegerType()),
         StructField("score", DoubleType()),
     ])
-    # the limit bounds the collect itself (driver memory stays capped even
-    # on a pathological input) and costs no extra job vs a separate count
-    q_rows = (
+    # one job over the caller's frame (a limit().collect() can take two);
+    # the bound keeps driver memory capped even on a pathological input
+    q_rows = collect_bounded(
         queries.select(
             F.col(query_id).alias("query_id"), V.as_double(F.col(query_vec)).alias("_qv")
-        )
-        .limit(max_queries + 1)
-        .collect()
+        ),
+        max_queries,
+        f"brute_force_topk collects the query side to the driver; got "
+        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
+        f"the query set or use ivf_topk / the LSH near-dup path for "
+        f"corpus-sized query sets.",
     )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk collects the query side to the driver; got "
-            f">{max_queries} query rows (max_queries={max_queries}). Chunk "
-            f"the query set or use ivf_topk / the LSH near-dup path for "
-            f"corpus-sized query sets."
-        )
     if not q_rows:
-        return queries.sparkSession.createDataFrame([], out_type)
+        return local_frame(queries.sparkSession, [], out_type)
     qids = [r["query_id"] for r in q_rows]
     Q = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
     if metric == "cosine":
@@ -226,8 +223,7 @@ def ivf_topk(
     )
 
     centers = [(ci, [float(x) for x in c]) for ci, c in enumerate(C)]
-    spark = corpus.sparkSession
-    centers_df = spark.createDataFrame(centers, ["cell_id", "center"])
+    centers_df = local_frame(corpus.sparkSession, centers, "cell_id bigint, center array<double>")
 
     q = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv"))
     q_cells = (
@@ -824,17 +820,13 @@ def ivf_pq_topk_multi(
     B = [np.array(b, dtype=np.int64) for b in codebooks]
     m = len(B)
     sub = _uniform_subdim(B)
-    q_rows = (
-        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv"))
-        .limit(max_queries + 1)
-        .collect()
+    q_rows = collect_bounded(
+        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv")),
+        max_queries,
+        f"ivf_pq_topk_multi collects the query side to the driver; got "
+        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
+        f"the query set.",
     )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"ivf_pq_topk_multi collects the query side to the driver; got "
-            f">{max_queries} query rows (max_queries={max_queries}). Chunk "
-            f"the query set."
-        )
     seen_qids = set()
     for r in q_rows:
         if r["_qid"] in seen_qids:
@@ -854,10 +846,10 @@ def ivf_pq_topk_multi(
                 ((B[s] - rq[s * sub:(s + 1) * sub]) ** 2).sum(axis=1) for s in range(m)
             ])
             probe_rows.append((r["_qid"], int(c), [int(v) for v in lut]))
-    spark = encoded.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, f"_qid {queries.schema[query_id].dataType.simpleString()}, "
-                    f"{cell_col} int, _lut array<bigint>"
+    probes = local_frame(
+        encoded.sparkSession, probe_rows,
+        f"_qid {queries.schema[query_id].dataType.simpleString()}, "
+        f"{cell_col} int, _lut array<bigint>",
     )
     # flat-LUT block offsets: cumulative, NOT s*subk — ragged codebooks
     # (per-subspace lengths may differ) would otherwise index the wrong
@@ -1005,17 +997,13 @@ def ivf_pq_refine_multi(
     B = [np.array(b, dtype=np.int64) for b in codebooks]
     m = len(B)
     sub = _uniform_subdim(B)
-    q_rows = (
-        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv"))
-        .limit(max_queries + 1)
-        .collect()
+    q_rows = collect_bounded(
+        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv")),
+        max_queries,
+        f"ivf_pq_refine_multi collects the query side to the driver; got "
+        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
+        f"the query set.",
     )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"ivf_pq_refine_multi collects the query side to the driver; got "
-            f">{max_queries} query rows (max_queries={max_queries}). Chunk "
-            f"the query set."
-        )
     seen = set()
     for r in q_rows:
         if r["_qid"] in seen:
@@ -1033,10 +1021,10 @@ def ivf_pq_refine_multi(
             probe_rows.append(
                 (r["_qid"], int(c), [int(v) for v in lut], [int(v) for v in q])
             )
-    spark = encoded.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, f"_qid {queries.schema[query_id].dataType.simpleString()}, "
-                    f"{cell_col} int, _lut array<bigint>, _qq array<bigint>"
+    probes = local_frame(
+        encoded.sparkSession, probe_rows,
+        f"_qid {queries.schema[query_id].dataType.simpleString()}, "
+        f"{cell_col} int, _lut array<bigint>, _qq array<bigint>",
     )
     offsets = [0]
     for b in B:

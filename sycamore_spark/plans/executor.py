@@ -103,6 +103,7 @@ class PlanExecutor:
         return df
 
     def _op_QueryVectorDatabase(self, n: L.QueryVectorDatabase, _):
+        from sycamore_spark.functions.local import local_frame
         from sycamore_spark.operators.similarity import brute_force_topk
 
         corpus = load_table(self.spark, self.sf_dir, n.table)
@@ -111,7 +112,7 @@ class PlanExecutor:
             # kNN — restrict BEFORE ranking so top-k is exact over
             # qualifying rows (a pushdown-able parquet predicate)
             corpus = corpus.filter(n.filter_expr)
-        q = self.spark.createDataFrame([(0, n.query_vector)], "vec_id int, embedding array<float>")
+        q = local_frame(self.spark, [(0, n.query_vector)], "vec_id int, embedding array<float>")
         hits = brute_force_topk(q, corpus, k=n.k)
         return corpus.join(
             hits.select(F.col("neighbor_id").alias("vec_id"), "score"), "vec_id"

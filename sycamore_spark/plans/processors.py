@@ -74,16 +74,3 @@ def only_retrieval(plan: L.LogicalPlan) -> L.LogicalPlan:
         plan = plan.model_copy(update={"result_node": result.inputs[0]})
         result = plan.nodes[plan.result_node]
     return plan
-
-
-def always_summarize(plan: L.LogicalPlan) -> L.LogicalPlan:
-    """Append SummarizeData at the head if the result is a doc set
-    (reference: AlwaysSummarize, strategy.py:173-199)."""
-    result = plan.nodes[plan.result_node]
-    if result.node_type in ("SummarizeData", "Count", "Math"):
-        return plan
-    next_id = max(plan.nodes) + 1
-    summ = L.SummarizeData(node_id=next_id, question=plan.query, inputs=[plan.result_node])
-    nodes = dict(plan.nodes)
-    nodes[next_id] = summ
-    return plan.model_copy(update={"nodes": nodes, "result_node": next_id})

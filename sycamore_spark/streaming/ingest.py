@@ -62,15 +62,6 @@ def write_stream_parquet(df: DataFrame, path: str, checkpoint: str,
     return w.start()
 
 
-def run_batch_as_stream(spark: SparkSession, src_dir: str, schema: StructType,
-                        transform, out_dir: str, checkpoint: str) -> None:
-    """Run a batch-defined transform over a directory as a drain-and-stop
-    stream (same plan, streaming execution)."""
-    stream = stream_from_directory(spark, src_dir, schema)
-    q = write_stream_parquet(transform(stream), out_dir, checkpoint)
-    q.awaitTermination()
-
-
 def dedup_append_sink(
     stream: DataFrame,
     out_dir: str,
