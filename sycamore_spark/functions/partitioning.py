@@ -20,7 +20,9 @@ that are about to each cost milliseconds of Python anyway.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -58,6 +60,121 @@ def lineage_cut(df: DataFrame, checkpoint_dir: str | None = None, eager: bool = 
         sc.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def duplicate_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """Up to five ``id_col`` values that occur more than once in ``df``:
+    the one-row-per-id check of a CDC delta (empty when it holds)."""
+    from pyspark.sql import functions as F
+
+    return (
+        df.groupBy(F.col(id_col))
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .limit(5)
+        .select(id_col)
+    )
+
+
+def fold_touched_buckets(
+    store_dir: str,
+    store: DataFrame | None,
+    changes: DataFrame,
+    new_rows: Callable[[DataFrame], DataFrame],
+    id_col: str,
+    bucket_col: str,
+    op_col: str,
+    delete_op: str,
+    bucket_of_id: Column | None = None,
+    rebuild: Callable[[DataFrame], DataFrame] | None = None,
+    prepared: bool = False,
+) -> int:
+    """Fold a CDC delta (each id at most once, batch-sized) into a store
+    written ``partitionBy(bucket_col)`` at ``store_dir``, rewriting only the
+    buckets the delta touches. Returns the touched-bucket count.
+
+    The caller supplies what differs between stores:
+
+    - ``store``: the store as read, or None when a missing store counts
+      as empty (the fold then builds the buckets from the delta alone);
+    - ``new_rows(upserts)``: the delta's non-delete rows (``op_col``
+      dropped) in the store's layout, ``id_col`` and ``bucket_col``
+      included;
+    - ``bucket_of_id``: a bucket expression over ``id_col`` when buckets
+      are a hash of the id, so the touched buckets follow from the delta
+      alone; None finds the old buckets of the delta ids with a semi-join
+      scan of the store and adds the buckets of the new rows;
+    - ``rebuild(merged)``: an optional per-bucket recompute of the merged
+      rows (whatever it derives must stay inside a bucket).
+
+    Jobs: one probe collect (touched buckets; the duplicate-id check rides
+    it unless ``prepared``), one survivors collect that also materializes
+    the lazy cut of the merged rows, and the dynamic-partition overwrite.
+    The cut is required: the write replaces files the merged plan reads.
+    ``prepared=True`` asserts the caller already cut and dup-checked the
+    delta; an unchecked duplicate id would silently duplicate rows.
+    Dynamic overwrite cannot write an empty partition, so the directory of
+    a bucket whose last row was deleted is removed explicitly."""
+    from pyspark.sql import functions as F
+
+    from sycamore_spark.materialize import _hadoop_fs
+
+    if not prepared:
+        # lazy: the probe below is the first action on the delta
+        changes = lineage_cut(changes, eager=False)
+    new = new_rows(changes.filter(F.col(op_col) != delete_op).drop(op_col))
+    delta_ids = changes.select(F.col(id_col)).distinct()
+    if bucket_of_id is not None:
+        buckets = changes.select(bucket_of_id.alias(bucket_col)).distinct()
+    else:
+        new_buckets = new.select(bucket_col).distinct()
+        old_buckets = (
+            new_buckets.limit(0) if store is None else
+            store.join(F.broadcast(delta_ids), id_col, "left_semi")
+            .select(bucket_col).distinct()
+        )
+        buckets = old_buckets.unionByName(new_buckets).distinct()
+    probe = buckets.select(
+        F.lit("b").alias("_k"), F.col(bucket_col).cast("string").alias("_v")
+    )
+    if not prepared:
+        probe = duplicate_ids(changes, id_col).select(
+            F.lit("d").alias("_k"), F.col(id_col).cast("string").alias("_v")
+        ).unionByName(probe)
+    rows = probe.collect()
+    dup = [r[1] for r in rows if r[0] == "d"]
+    if dup:
+        raise ValueError(
+            f"delta carries duplicate {id_col} values {dup}: collapse each id "
+            f"to one final row (deterministic winner, e.g. max seq) before applying"
+        )
+    touched = sorted(int(r[1]) for r in rows if r[0] == "b")
+    if not touched:
+        return 0
+    keep = (
+        new.limit(0) if store is None else
+        store.filter(F.col(bucket_col).isin(touched))
+        .join(F.broadcast(delta_ids), id_col, "left_anti")
+        .select(*new.columns)
+    )
+    merged = keep.unionByName(new)
+    if rebuild is not None:
+        merged = rebuild(merged)
+    # lazy: the survivors collect computes every partition of the cut
+    merged = lineage_cut(merged, eager=False)
+    survivors = {r[0] for r in merged.select(bucket_col).distinct().collect()}
+    (
+        merged.repartition(len(touched), F.col(bucket_col))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(bucket_col)
+        .parquet(store_dir)
+    )
+    for b in touched:
+        if b not in survivors:
+            fs, p = _hadoop_fs(changes.sparkSession, f"{store_dir.rstrip('/')}/{bucket_col}={b}")
+            fs.delete(p, True)
+    return len(touched)
 
 
 def overlap_jobs(*thunks, max_workers: int | None = None) -> list:

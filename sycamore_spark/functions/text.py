@@ -38,6 +38,15 @@ def tokens(col: Column, lower: bool = True, pattern: str = r"\s+") -> Column:
     return F.split(c, pattern)
 
 
+def terms(col: Column) -> Column:
+    """The retrieval term array: the non-empty lowercase whitespace tokens.
+    ``trim`` strips only spaces, so a text that starts or ends with a tab or
+    newline (or is empty) splits to empty strings; those are not terms.
+    NULL text gives NULL (no terms). Every BM25/QLM scorer and store
+    builder tokenizes documents and queries with this one expression."""
+    return F.array_remove(tokens(col), "")
+
+
 def token_count(col: Column) -> Column:
     """Whitespace token count (BPE-ish subword count ≈ chars/4 is a separate
     estimator, see bpe_token_estimate)."""

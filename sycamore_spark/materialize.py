@@ -50,12 +50,43 @@ def _fs_exists(spark, path_str: str) -> bool:
 
 
 def _fs_write_text(spark, path_str: str, text: str) -> None:
+    """Replace the small file at ``path_str`` (a pointer, mark or marker)
+    atomically: the text goes in full to a hidden temp sibling, which is
+    then renamed over the target. A reader or a crash sees the old content
+    or the new, never a truncated file; a crash leaves at most the temp
+    file, which nothing reads ('.' names are hidden from Spark listings).
+
+    On the local FS the write bypasses the checksum layer: rename(2)
+    replaces the target atomically, but a ``.crc`` sidecar renamed after
+    it would leave a window, or after a crash a lasting mismatch, in which
+    the new bytes fail the old checksum; a stale sidecar is deleted before
+    the swap. Other schemes rename with FileContext OVERWRITE, atomic on
+    HDFS (whose FileSystem.rename refuses an existing target)."""
+    import uuid
+
     fs, p = _hadoop_fs(spark, path_str)
-    stream = fs.create(p, True)
+    local = fs.getScheme() == "file"
+    if local:
+        fs = fs.getRawFileSystem()
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(p.getParent(), f".{p.getName()}.{uuid.uuid4().hex}.tmp")
+    stream = fs.create(tmp, False)
     try:
         stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
+    if local:
+        fs.delete(Path(p.getParent(), f".{p.getName()}.crc"), False)
+        if not fs.rename(tmp, p):
+            raise OSError(f"could not rename {tmp} over {p}")
+        return
+    rename = spark._jvm.org.apache.hadoop.fs.Options.Rename
+    opts = spark.sparkContext._gateway.new_array(rename, 1)
+    opts[0] = rename.OVERWRITE
+    ctx = spark._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        p.toUri(), spark._jsc.hadoopConfiguration()
+    )
+    ctx.rename(tmp, p, opts)
 
 
 def delete_path(spark, path_str: str) -> bool:

@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sycamore_spark.functions import text as T
+
 
 def _micros(col: Column) -> Column:
     return F.floor(col * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
@@ -37,7 +39,7 @@ def _micros(col: Column) -> Column:
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+        F.explode(T.tokens(F.col(text_col))).alias("_tok"),
     ).filter(F.length("_tok") > 0)
 
 
@@ -52,7 +54,7 @@ def nb_train(
     """
     toks = df.select(
         F.col(label_col).alias("_lbl"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+        F.explode(T.tokens(F.col(text_col))).alias("_tok"),
     ).filter(F.length("_tok") > 0)
     pair_counts = toks.groupBy("_lbl", "_tok").agg(F.count(F.lit(1)).alias("_clt"))
     label_tokens = toks.groupBy("_lbl").agg(F.count(F.lit(1)).alias("_cl"))

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sycamore_spark.functions import text as T
+
 
 def corpus_diff(
     old: DataFrame,
@@ -120,7 +122,7 @@ def corpus_divergence(
     """
     toks = df.select(
         F.col(side_col).alias("_s"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+        F.explode(T.tokens(F.col(text_col))).alias("_tok"),
     ).filter((F.length("_tok") > 0) & F.col("_s").isin(side_a, side_b))
     counts = toks.groupBy("_tok").agg(
         F.sum(F.when(F.col("_s") == side_a, 1).otherwise(0)).alias("_ca"),

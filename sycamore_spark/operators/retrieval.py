@@ -20,17 +20,113 @@ partitioning/evaluation order, and replayable bit-for-bit on any engine
 whose ``ln`` is within ~1e-9 of correctly rounded (Spark's Math.log and
 DuckDB's libm differ by <=~1e-12 relative — measured over 20k idf-shaped
 inputs with zero 6dp-quantized mismatches).
+
+Term convention: every scorer and store builder here tokenizes documents
+and queries with ``functions.text.terms``, the non-empty lowercase
+whitespace tokens. A document's length dl is its term count; a document
+with no terms (NULL, empty or whitespace-only text) counts in neither N
+nor avgdl. The raw-text scorers and the maintained store pair
+(``bucketed_postings`` + ``doc_norms``) therefore agree bit-for-bit.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 from pyspark.errors.exceptions.captured import AnalysisException
 
 from sycamore_spark.functions.local import collect_bounded, local_frame
+from sycamore_spark.functions.partitioning import fold_touched_buckets
+from sycamore_spark.functions.text import terms
+
+
+def _bucket(col: Column, n_buckets: int) -> Column:
+    """A store bucket: of a term (postings) or of a document id (norms)."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
+def _doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, _tok): one row per term occurrence."""
+    return df.select(
+        F.col(id_col).alias("_id"), F.explode(terms(F.col(text_col))).alias("_tok")
+    )
+
+
+def _query_terms(queries: DataFrame, query_id_col: str, query_text_col: str) -> DataFrame:
+    """(_qid, _tok): each query's distinct terms (set semantics)."""
+    return queries.select(
+        F.col(query_id_col).alias("_qid"),
+        F.explode(F.array_distinct(terms(F.col(query_text_col)))).alias("_tok"),
+    )
+
+
+def _doc_lengths(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, _dl): the term count as a per-row projection, no explode and
+    no shuffle. A doc without terms keeps its row with _dl <= 0 (size of
+    NULL text is -1 with ANSI off): it joins no posting, and ``_counted``
+    keeps it out of every corpus statistic. Filtering the rows instead
+    would split the text twice, as Catalyst pushes the filter below the
+    projection by copying the expression."""
+    return df.select(F.col(id_col).alias("_id"), F.size(terms(F.col(text_col))).alias("_dl"))
+
+
+def _counted(dl: Column) -> Column:
+    """dl of a doc that counts in the corpus statistics, else NULL (which
+    count, avg and sum skip)."""
+    return F.when(dl > 0, dl)
+
+
+def _corpus_stats(dl: DataFrame, dl_col: str) -> DataFrame:
+    """The one-row (_n_docs, _avgdl) frame over the docs with a term."""
+    n = _counted(F.col(dl_col))
+    return dl.agg(F.count(n).alias("_n_docs"), F.avg(n).alias("_avgdl"))
+
+
+def _bm25_micros(tf: str, df: str, dl: str, n_docs: str, avgdl: str, k1: float, b: float) -> Column:
+    """One term's Lucene-BM25 contribution to one doc, in integer micros,
+    from the named columns:
+
+        idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5))
+        micros = floor(idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) * 1e6 + 0.5)
+
+    Quantized BEFORE the per-doc sum: bigint addition is associative, so
+    the score is partitioning-independent and hashable."""
+    tf, df, dl, n_docs, avgdl = map(F.col, (tf, df, dl, n_docs, avgdl))
+    idf = F.log(F.lit(1.0) + (n_docs - df + F.lit(0.5)) / (df + F.lit(0.5)))
+    tf_norm = (tf * F.lit(k1 + 1.0)) / (
+        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl)
+    )
+    return F.floor(idf * tf_norm * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
+
+
+def _term_freqs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(term, id_col, tf): one explode into one map-side-combined
+    (term, doc) hash agg."""
+    return (
+        df.select(F.col(id_col), F.explode(terms(F.col(text_col))).alias("term"))
+        .groupBy("term", id_col)
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+
+
+def _rank_postings(tf: DataFrame, id_col: str, *extra: str) -> DataFrame:
+    """(term, id_col, tf) rows -> postings (term, df, rank, id_col, tf,
+    *extra): the term's document frequency and the doc's impact rank in the
+    term's postings (tf desc, id asc), both riding one window exchange on
+    the term."""
+    by_term = Window.partitionBy("term")
+    impact = by_term.orderBy(F.col("tf").desc(), F.col(id_col).asc())
+    return tf.select(
+        "term",
+        F.count(F.lit(1)).over(by_term).cast("long").alias("df"),
+        F.row_number().over(impact).cast("long").alias("rank"),
+        id_col,
+        F.col("tf").cast("long").alias("tf"),
+        *extra,
+    )
 
 
 def bm25_scores(
@@ -49,7 +145,8 @@ def bm25_scores(
 
     Returns (id_col, bm25_micros bigint): the score in integer micros
     (divide by 1e6 for the float value). N and avgdl are corpus-wide over
-    ALL documents; df counts documents containing the term.
+    every document with at least one term (the module's term convention);
+    df counts documents containing the term.
 
     BROADCAST CONTRACT: the ``F.broadcast(dfreq)`` / ``F.broadcast(stats)``
     hints below are bounded by the QUERY vocabulary (one row per query
@@ -59,49 +156,20 @@ def bm25_scores(
     corpus-vocabulary twin and deliberately does NOT broadcast its
     vocabulary join (AQE upgrades it to broadcast only when it fits).
     """
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+    # dl as a per-row projection: the corpus-scale hash-agg shuffle for
+    # document lengths disappears (guide §2.4; one corpus explode, not two)
+    dl = _doc_lengths(df, id_col, text_col)
+    matched = _doc_terms(df, id_col, text_col).filter(
+        F.col("_tok").isin([t.lower() for t in query_terms])
     )
-    # dl as a native per-row projection — size(split(...)) counts exactly
-    # the rows the historical explode+groupBy counted (split never returns
-    # an empty array), so the corpus-scale hash-agg SHUFFLE for document
-    # lengths disappears (guide §2.4; r14 — one corpus explode, not two).
-    # NULL text, absent from the exploded agg, is filtered out BEFORE the
-    # projection: size(NULL) is NULL under ANSI but -1 without it
-    dl = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_dl"),
-    )
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("_n_docs"), F.avg("_dl").alias("_avgdl")
-    )
-
-    terms = [t.lower() for t in query_terms]
-    matched = toks.filter(F.col("_tok").isin(terms))
     tf = matched.groupBy("_id", "_tok").agg(F.count(F.lit(1)).alias("_tf"))
     dfreq = tf.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-
-    scored = (
+    return (
         tf.join(F.broadcast(dfreq), "_tok")
         .join(dl, "_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("_n_docs") - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
-    )
-    tf_norm = (F.col("_tf") * F.lit(k1 + 1.0)) / (
-        F.col("_tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.col("_avgdl"))
-    )
-    # integer micros per term BEFORE the per-doc sum: bigint addition is
-    # associative, so the result is partitioning-independent and hashable
-    contrib = F.floor(idf * tf_norm * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-    return (
-        scored.withColumn("_c", contrib)
+        .crossJoin(F.broadcast(_corpus_stats(dl, "_dl")))
         .groupBy("_id")
-        .agg(F.sum("_c").alias("bm25_micros"))
+        .agg(F.sum(_bm25_micros("_tf", "_df", "_dl", "_n_docs", "_avgdl", k1, b)).alias("bm25_micros"))
         .select(F.col("_id").alias(id_col), "bm25_micros")
     )
 
@@ -147,7 +215,7 @@ def bm25_scores_multi(
     The queries-to-postings join is a plain hash equi-join on the term.
     """
     # TWO corpus passes, each with a SMALL shuffle — measured and chosen
-    # over the r7 one-explode rewrite (tools/ab_bm25.py; PERF.md r8 table):
+    # over the r7 one-explode rewrite (PERF.md r8 table):
     # the one-pass form aggregated (id, token) over the FULL corpus
     # vocabulary before the query semi-join, so its hash-agg shuffle was
     # corpus-sized; here the tf agg shuffles only query-matched tokens and
@@ -156,28 +224,11 @@ def bm25_scores_multi(
     # queries alike); at 100 TB shuffle bytes dominate rescans of a
     # column-pruned text scan, so the small-shuffle form is the scale
     # choice too. This reverts the r7 snippets/subtask_exec regression.
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
-    )
-    # dl as a native projection instead of explode+groupBy — identical
-    # values, NULL text filtered first (see bm25_scores), one fewer
-    # corpus-scale shuffle
-    dl = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_dl"),
-    )
-    stats = dl.agg(F.count(F.lit(1)).alias("_n_docs"), F.avg("_dl").alias("_avgdl"))
-
-    qterms = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+"))
-        ).alias("_tok"),
-    )
+    dl = _doc_lengths(df, id_col, text_col)
+    qterms = _query_terms(queries, query_id_col, query_text_col)
     wanted = qterms.select("_tok").distinct()
     tf = (
-        toks.join(wanted, "_tok", "left_semi")
+        _doc_terms(df, id_col, text_col).join(wanted, "_tok", "left_semi")
         .groupBy("_id", "_tok")
         .agg(F.count(F.lit(1)).alias("_tf"))
     )
@@ -186,30 +237,16 @@ def bm25_scores_multi(
         dfreq = dfreq.filter(F.col("_df") <= max_df)
         tf = tf.join(F.broadcast(dfreq.select("_tok")), "_tok", "left_semi")
 
-    scored = (
+    out = (
         qterms.join(tf, "_tok")
         .join(F.broadcast(dfreq), "_tok")
         .join(dl, "_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("_n_docs") - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
-    )
-    tf_norm = (F.col("_tf") * F.lit(k1 + 1.0)) / (
-        F.col("_tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.col("_avgdl"))
-    )
-    contrib = F.floor(idf * tf_norm * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-    out = (
-        scored.withColumn("_c", contrib)
+        .crossJoin(F.broadcast(_corpus_stats(dl, "_dl")))
         .groupBy("_qid", "_id")
-        .agg(F.sum("_c").alias("bm25_micros"))
+        .agg(F.sum(_bm25_micros("_tf", "_df", "_dl", "_n_docs", "_avgdl", k1, b)).alias("bm25_micros"))
     )
     extra = []
     if k is not None or keep_rank:
-        from pyspark.sql.window import Window
-
         w = Window.partitionBy("_qid").orderBy(
             F.col("bm25_micros").desc(), F.col("_id").asc()
         )
@@ -249,10 +286,7 @@ def best_snippets(
     term. Returns (query_id_col, id_col, snippet_start, hits, snippet).
     Matching is set-semantics lowercase whitespace tokens, consistent
     with the bm25 operators."""
-    from pyspark.sql.window import Window
-
-    toks_arr = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    base = df.select(F.col(id_col).alias("_id"), toks_arr.alias("_tk"))
+    base = df.select(F.col(id_col).alias("_id"), terms(F.col(text_col)).alias("_tk"))
     want = None
     if pairs is not None:
         # pairs is results-sized by contract (retrieval top-k: ~k x
@@ -274,12 +308,7 @@ def best_snippets(
     postings = base.select(
         "_id", F.posexplode("_tk").alias("_pos", "_tok")
     )
-    qterms = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+"))
-        ).alias("_tok"),
-    )
+    qterms = _query_terms(queries, query_id_col, query_text_col)
     matched = postings.join(qterms, "_tok").select("_qid", "_id", "_pos")
     if want is not None:
         # per-(query, doc) restriction — a doc may be top-k for only one
@@ -331,17 +360,13 @@ def tfidf_topk_terms(
     one-row N broadcast -> per-doc window top-k. Three hash aggs + one
     window; no driver collection.
     """
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
+    tf = _doc_terms(df, id_col, text_col).groupBy("_id", "_tok").agg(
+        F.count(F.lit(1)).alias("_tf")
     )
-    tf = toks.groupBy("_id", "_tok").agg(F.count(F.lit(1)).alias("_tf"))
     dfreq = tf.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("_n_docs"))
     idf = F.log((F.col("_n_docs") + F.lit(1.0)) / (F.col("_df") + F.lit(1.0))) + F.lit(1.0)
     micros = F.floor(F.col("_tf") * idf * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("_id").orderBy(F.col("tfidf_micros").desc(), F.col("_tok").asc())
     return (
         tf.join(dfreq, "_tok")
@@ -387,13 +412,13 @@ def phrase_search(
 
     from sycamore_spark.functions.partitioning import fan_out
 
-    terms = [t for t in phrase.lower().strip().split() if t]
-    if not terms:
+    words = [t for t in phrase.lower().strip().split() if t]
+    if not words:
         raise ValueError("phrase must contain at least one token")
-    n = len(terms)
+    n = len(words)
     # token-scan CPU dominates: widen a single-file extract (cluster no-op)
     df = fan_out(df)
-    tk = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    tk = terms(F.col(text_col))
 
     def _starts(arr):
         # sequence(0, stop) DESCENDS when stop < 0 — guard short docs.
@@ -405,7 +430,7 @@ def phrase_search(
                     lambda a, b: a & b,
                     [
                         F.element_at(arr, i + F.lit(1 + j)) == F.lit(t)
-                        for j, t in enumerate(terms)
+                        for j, t in enumerate(words)
                     ],
                 ),
             ),
@@ -458,31 +483,12 @@ def build_inverted_index(
     case, or pre-drop stopwords via a max-df ceiling the same way min_df
     prunes the tail.
     """
-    from pyspark.sql.window import Window
-
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("term", "_id").agg(F.count(F.lit(1)).alias("tf"))
-    w_term = Window.partitionBy("term")
-    w_rank = Window.partitionBy("term").orderBy(
-        F.col("tf").desc(), F.col("_id").asc()
-    )
-    out = (
-        tf.withColumn("df", F.count(F.lit(1)).over(w_term))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("df") >= min_df)
+    out = _rank_postings(_term_freqs(df, id_col, text_col), id_col).filter(
+        F.col("df") >= min_df
     )
     if top_docs is not None:
         out = out.filter(F.col("rank") <= top_docs)
-    return out.select(
-        "term",
-        F.col("df").cast("long").alias("df"),
-        F.col("rank").cast("long").alias("rank"),
-        F.col("_id").alias(id_col),
-        F.col("tf").cast("long").alias("tf"),
-    )
+    return out
 
 
 def rrf_fuse(
@@ -537,8 +543,6 @@ def rrf_fuse(
     for p in parts[1:]:
         u = u.unionByName(p)
     fused = u.groupBy("_q", "_i").agg(F.sum("_c").alias("rrf_micros"))
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("_q").orderBy(F.col("rrf_micros").desc(), F.col("_i").asc())
     out = fused.withColumn("rank", F.row_number().over(w))
     if k is not None:
@@ -574,26 +578,8 @@ def bucketed_postings(
 
     Scale shape: one explode -> one map-side-combined (term, doc) hash
     agg -> one per-term window (df + rank ride the same exchange)."""
-    from pyspark.sql.window import Window
-
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("term", "_id").agg(F.count(F.lit(1)).alias("tf"))
-    w_term = Window.partitionBy("term")
-    w_rank = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col("_id").asc())
-    return (
-        tf.withColumn("df", F.count(F.lit(1)).over(w_term))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .select(
-            "term",
-            F.col("df").cast("long").alias("df"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("_id").alias(id_col),
-            F.col("tf").cast("long").alias("tf"),
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias(bucket_col),
-        )
+    return _rank_postings(_term_freqs(df, id_col, text_col), id_col).withColumn(
+        bucket_col, _bucket(F.col("term"), n_buckets)
     )
 
 
@@ -640,7 +626,8 @@ def index_apply_changes(
     then rebuild ONLY those buckets: (old postings minus delta ids) ∪
     new postings, with df and impact rank recomputed per term — complete
     and correct within the bucket because a term's postings never span
-    buckets. Dynamic partition overwrite; emptied bucket dirs removed.
+    buckets. Dynamic partition overwrite; emptied bucket dirs removed
+    (the shared steps of ``functions.partitioning.fold_touched_buckets``).
     Returns the touched-bucket count.
 
     Scale contract: work ∝ touched buckets (a bucket holds ~vocab/N
@@ -649,116 +636,26 @@ def index_apply_changes(
     the build — it is the store's physical contract, like the ANN
     store's cell count.
 
-    ``prepared=True`` asserts the caller ALREADY localCheckpointed the
-    delta and validated the one-row-per-id contract (e.g. a caller
-    folding the same checkpointed delta into several stores, or the
-    streaming fold which validates once per micro-batch): the entry
-    checkpoint and the dup check are skipped. Results are identical
-    WHEN the contract holds; a prepared delta that was NOT checkpointed
-    re-runs its (possibly non-deterministic) lineage on every reference
-    below, and one carrying duplicate ids silently rebuilds buckets with
-    duplicate postings rows that skew df/rank instead of raising — the
-    corruption modes the default path pays two jobs to prevent."""
-    from pyspark.sql.window import Window
-
-    from sycamore_spark.materialize import _hadoop_fs
-
-    if not prepared:
-        # lazy cut: the touched-bucket probe below is the first action on
-        # the delta and materializes the checkpoint — the dup check rides
-        # the same probe job (r14: entry-checkpoint + dup-check jobs folded
-        # into the probe; was 2 extra jobs per non-prepared fold)
-        changes = changes.localCheckpoint(eager=False)
-    # None: nothing old to keep — the fold rebuilds purely from the delta
-    store = _read_store(spark, index_dir, bucket_col)
-    delta_ids = changes.select(F.col(id_col)).distinct()
-    new_posts = (
-        changes.filter(F.col(op_col) != delete_op)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("term"),
-        )
-        .filter(F.col("term") != "")
-        .groupBy("term", "_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(
-            bucket_col,
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-        )
+    ``prepared=True`` asserts the caller ALREADY cut the delta's lineage
+    and validated the one-row-per-id contract (e.g. a caller folding the
+    same checkpointed delta into several stores, or the streaming fold
+    which validates once per micro-batch): the entry cut and the dup
+    check are skipped. Results are identical WHEN the contract holds; a
+    prepared delta that was NOT cut re-runs its (possibly
+    non-deterministic) lineage on every reference, and one carrying
+    duplicate ids silently rebuilds buckets with duplicate postings rows
+    that skew df/rank instead of raising."""
+    return fold_touched_buckets(
+        index_dir,
+        _read_store(spark, index_dir, bucket_col),
+        changes,
+        lambda ups: _term_freqs(ups, id_col, text_col).withColumn(
+            bucket_col, _bucket(F.col("term"), n_buckets)
+        ),
+        id_col, bucket_col, op_col, delete_op,
+        rebuild=lambda merged: _rank_postings(merged, id_col, bucket_col),
+        prepared=prepared,
     )
-    new_buckets = new_posts.select(bucket_col).distinct()
-    old_buckets = (
-        new_buckets.limit(0) if store is None else
-        store.join(F.broadcast(delta_ids), id_col, "left_semi")
-        .select(bucket_col).distinct()
-    )
-    probe = (
-        old_buckets.unionByName(new_buckets).distinct()
-        .select(F.lit("b").alias("_k"), F.col(bucket_col).cast("string").alias("_v"))
-    )
-    if not prepared:
-        probe = (
-            changes.groupBy(F.col(id_col))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(5)
-            .select(F.lit("d").alias("_k"), F.col(id_col).cast("string").alias("_v"))
-            .unionByName(probe)
-        )
-    rows = probe.collect()
-    dup = [r[1] for r in rows if r[0] == "d"]
-    if dup:
-        raise ValueError(
-            f"delta carries duplicate {id_col} values {dup}: "
-            f"collapse each id to one final row before applying"
-        )
-    touched = sorted(int(r[1]) for r in rows if r[0] == "b")
-    if not touched:
-        return 0
-    keep = (
-        new_posts.select("term", "_id", "tf", bucket_col).limit(0)
-        if store is None else
-        store.filter(F.col(bucket_col).isin(touched))
-        .join(F.broadcast(delta_ids), id_col, "left_anti")
-        .select("term", F.col(id_col).alias("_id"), "tf", bucket_col)
-    )
-    merged = keep.unionByName(
-        new_posts.filter(F.col(bucket_col).isin(touched))
-    )
-    w_term = Window.partitionBy("term")
-    w_rank = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col("_id").asc())
-    rebuilt = (
-        merged.withColumn("df", F.count(F.lit(1)).over(w_term))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .select(
-            "term",
-            F.col("df").cast("long").alias("df"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("_id").alias(id_col),
-            F.col("tf").cast("long").alias("tf"),
-            bucket_col,
-        )
-        # the write replaces files the plan reads, so the lineage must be
-        # cut before it — but the cut is LAZY: the survivors collect below
-        # is the first action and materializes every partition (its
-        # distinct shuffles the whole frame), so the checkpoint piggybacks
-        # on a job that already had to run (r14: 4 -> 3 jobs per fold)
-        .localCheckpoint(eager=False)
-    )
-    survivors = {r[0] for r in rebuilt.select(bucket_col).distinct().collect()}
-    (
-        rebuilt.repartition(len(touched), F.col(bucket_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucket_col)
-        .parquet(index_dir)
-    )
-    for b in (b for b in touched if b not in survivors):
-        fs, p = _hadoop_fs(spark, f"{index_dir.rstrip('/')}/{bucket_col}={b}")
-        fs.delete(p, True)
-    return len(touched)
 
 
 def doc_norms(
@@ -769,25 +666,22 @@ def doc_norms(
     n_buckets: int = 64,
 ) -> DataFrame:
     """The norms companion table of the maintained index — Lucene's norms
-    file as a lakehouse table: one row per document with its token count
-    (``dl``), bucketed by ``pmod(xxhash64(id), n_buckets)`` so a document
-    delta rewrites only its ids' buckets. BM25 needs dl for every MATCHED
-    doc and (n_docs, avgdl) globally; deriving dl from the postings would
-    scan every term bucket a doc touches — the separate narrow table is
-    the standard design. Docs with no tokens carry no row (they can never
-    match and must not count in n_docs/avgdl — the bm25_scores
-    convention)."""
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_t"),
-    ).filter(F.col("_t") != "")
+    file as a lakehouse table: one row per document with its term count
+    (``dl``: its non-empty lowercase whitespace tokens, the
+    ``functions.text.terms`` convention), bucketed by
+    ``pmod(xxhash64(id), n_buckets)`` so a document delta rewrites only
+    its ids' buckets. BM25 needs dl for every MATCHED doc and (n_docs,
+    avgdl) globally; deriving dl from the postings would scan every term
+    bucket a doc touches — the separate narrow table is the standard
+    design. A doc with no terms (NULL, empty or whitespace-only text)
+    carries no row: it can never match and counts in neither n_docs nor
+    avgdl, as in every BM25 scorer of this module."""
     return (
-        toks.groupBy("_id")
-        .agg(F.count(F.lit(1)).alias("dl"))
+        _doc_terms(df, id_col, text_col)
+        .groupBy("_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("dl"))
         .select(
-            F.col("_id").alias(id_col),
-            F.col("dl").cast("long").alias("dl"),
-            F.pmod(F.xxhash64("_id"), F.lit(n_buckets)).cast("int").alias(bucket_col),
+            F.col("_id").alias(id_col), "dl", _bucket(F.col("_id"), n_buckets).alias(bucket_col)
         )
     )
 
@@ -815,7 +709,7 @@ def norms_from_postings(
         .select(
             F.col(id_col),
             "dl",
-            F.pmod(F.xxhash64(id_col), F.lit(n_buckets)).cast("int").alias(bucket_col),
+            _bucket(F.col(id_col), n_buckets).alias(bucket_col),
         )
     )
 
@@ -843,63 +737,17 @@ def norms_apply_changes(
     redundant per-store jobs are skipped — identical results ONLY under
     that contract (an unchecked duplicate id would silently write
     duplicate norms rows that skew n_docs/avgdl instead of raising)."""
-    from sycamore_spark.materialize import _hadoop_fs
-
-    if not prepared:
-        # lazy cut, materialized by the touched-bucket probe below; the
-        # dup check rides the same probe job (see index_apply_changes)
-        changes = changes.localCheckpoint(eager=False)
-    store = _read_store(spark, norms_dir, bucket_col)  # None: rebuild from the delta
-    new_norms = doc_norms(
-        changes.filter(F.col(op_col) != delete_op),
-        id_col=id_col, text_col=text_col,
-        bucket_col=bucket_col, n_buckets=n_buckets,
+    return fold_touched_buckets(
+        norms_dir,
+        _read_store(spark, norms_dir, bucket_col),
+        changes,
+        lambda ups: doc_norms(
+            ups, id_col=id_col, text_col=text_col, bucket_col=bucket_col, n_buckets=n_buckets
+        ),
+        id_col, bucket_col, op_col, delete_op,
+        bucket_of_id=_bucket(F.col(id_col), n_buckets),
+        prepared=prepared,
     )
-    probe = changes.select(
-        F.pmod(F.xxhash64(id_col), F.lit(n_buckets)).cast("int").alias("_b")
-    ).distinct().select(
-        F.lit("b").alias("_k"), F.col("_b").cast("string").alias("_v")
-    )
-    if not prepared:
-        probe = (
-            changes.groupBy(F.col(id_col))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(5)
-            .select(F.lit("d").alias("_k"), F.col(id_col).cast("string").alias("_v"))
-            .unionByName(probe)
-        )
-    rows = probe.collect()
-    dup = [r[1] for r in rows if r[0] == "d"]
-    if dup:
-        raise ValueError(
-            f"delta carries duplicate {id_col} values {dup}: "
-            f"collapse each id to one final row before applying"
-        )
-    touched = sorted(int(r[1]) for r in rows if r[0] == "b")
-    if not touched:
-        return 0
-    delta_ids = changes.select(F.col(id_col)).distinct()
-    keep = (
-        new_norms.limit(0) if store is None else
-        store.filter(F.col(bucket_col).isin(touched))
-        .join(F.broadcast(delta_ids), id_col, "left_anti")
-    )
-    # lazy cut materialized by the survivors collect (see
-    # index_apply_changes — one fewer job per fold, identical write)
-    merged = keep.unionByName(new_norms).localCheckpoint(eager=False)
-    survivors = {r[0] for r in merged.select(bucket_col).distinct().collect()}
-    (
-        merged.repartition(len(touched), F.col(bucket_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucket_col)
-        .parquet(norms_dir)
-    )
-    for b in (b for b in touched if b not in survivors):
-        fs, p = _hadoop_fs(spark, f"{norms_dir.rstrip('/')}/{bucket_col}={b}")
-        fs.delete(p, True)
-    return len(touched)
 
 
 def bm25_from_index(
@@ -941,16 +789,11 @@ def bm25_from_index(
     the index's own hash expression), and the (query, term) rows re-enter
     the plan as a driver-built ``LocalRelation``, so the caller's frame is
     never scanned again."""
-    terms_of = F.filter(
-        F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+")),
-        lambda t: t != "",
-    )
     q_rows = collect_bounded(
         queries.select(
             F.col(query_id_col).alias("_qid"),
-            F.transform(terms_of, lambda t: F.struct(
-                t.alias("term"),
-                F.pmod(F.xxhash64(t), F.lit(n_buckets)).cast("int").alias("_b"),
+            F.transform(F.array_distinct(terms(F.col(query_text_col))), lambda t: F.struct(
+                t.alias("term"), _bucket(t, n_buckets).alias("_b"),
             )).alias("_tb"),
         ),
         max_queries,
@@ -959,8 +802,8 @@ def bm25_from_index(
         f"the query set.",
     )
     term_rows = [(r["_qid"], t["term"], t["_b"]) for r in q_rows for t in r["_tb"] or ()]
-    terms = sorted({t for _, t, _ in term_rows})
-    if not terms:
+    wanted = sorted({t for _, t, _ in term_rows})
+    if not wanted:
         raise ValueError("queries contain no terms")
     bkts = sorted({b for _, _, b in term_rows})
     qterms = local_frame(
@@ -971,33 +814,18 @@ def bm25_from_index(
     posts = (
         spark.read.parquet(index_dir)
         .filter(F.col(bucket_col).isin(bkts))     # prunes at file listing
-        .filter(F.col("term").isin(terms))
+        .filter(F.col("term").isin(wanted))
         .select("term", F.col(id_col).alias("_id"), "tf", "df")
     )
     norms = spark.read.parquet(norms_dir).select(
         F.col(id_col).alias("_id"), "dl"
     )
-    stats = norms.agg(
-        F.count(F.lit(1)).alias("_n_docs"), F.avg("dl").alias("_avgdl")
-    )
-    scored = (
+    out = (
         qterms.join(posts, "term")
         .join(norms, "_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("_n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_norm = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("_avgdl"))
-    )
-    contrib = F.floor(idf * tf_norm * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
-    out = (
-        scored.withColumn("_c", contrib)
+        .crossJoin(F.broadcast(_corpus_stats(norms, "dl")))
         .groupBy("_qid", "_id")
-        .agg(F.sum("_c").alias("bm25_micros"))
+        .agg(F.sum(_bm25_micros("tf", "df", "dl", "_n_docs", "_avgdl", k1, b)).alias("bm25_micros"))
         .select(
             F.col("_qid").alias(query_id_col),
             F.col("_id").alias(id_col),
@@ -1005,8 +833,6 @@ def bm25_from_index(
         )
     )
     if k is not None:
-        from pyspark.sql.window import Window
-
         w = Window.partitionBy(query_id_col).orderBy(
             F.col("bm25_micros").desc(), F.col(id_col).asc()
         )
@@ -1039,10 +865,7 @@ def rebucket_postings(
     )
 
     cur = spark.read.parquet(ann_store_current_dir(spark, root))
-    out = cur.drop(bucket_col).withColumn(
-        bucket_col,
-        F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-    )
+    out = cur.drop(bucket_col).withColumn(bucket_col, _bucket(F.col("term"), n_buckets))
     return ann_store_publish(spark, root, out, cell_col=bucket_col)
 
 
@@ -1092,14 +915,11 @@ def maxsim_scores(
     corpus vocabulary. Returns (query_id, doc_id, rank, maxsim_micros),
     rank by (maxsim_micros desc, doc_id asc) per query, top ``top_k``
     rows."""
-    from pyspark.sql.window import Window
-
-    from sycamore_spark.functions import text as T
     from sycamore_spark.operators.dedup import md5_hash60
     from sycamore_spark.operators.embed import hashing_embedding_expr
 
     def tok_frame(frame, idc, textc, limit):
-        toks = F.array_distinct(T.tokens(F.col(textc)))
+        toks = F.array_distinct(terms(F.col(textc)))
         if limit is not None:
             toks = F.slice(toks, 1, limit)
         return frame.select(
@@ -1148,12 +968,12 @@ def maxsim_scores(
     # one sparse codegen dot per (query, token); one max column each
     aggs, by_qid = [], {}
     for j, r in enumerate(q_rows):
-        terms = [
+        parts = [
             F.element_at(F.col("_dv"), i + 1).cast("double") * F.lit(float(v))
             for i, v in enumerate(r["_vec"])
             if v != 0.0
         ]
-        dot = sum(terms[1:], terms[0]) if terms else F.lit(0.0)
+        dot = sum(parts[1:], parts[0]) if parts else F.lit(0.0)
         aggs.append(F.max(dot).alias(f"_m{j}"))
         by_qid.setdefault(r["_tid"], []).append(j)
     per_doc = dv.groupBy("_did").agg(*aggs)
@@ -1222,29 +1042,11 @@ def qlm_scores(
     broadcasts, one scalar stats broadcast; returns (query_id_col,
     id_col, qlm_micros) plus rank when ``k`` is set ((micros desc, id
     asc) ties)."""
-    from pyspark.sql.window import Window
-
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
-    )
-    # dl as a native projection instead of explode+groupBy — identical
-    # values, NULL text filtered first (see bm25_scores), one fewer
-    # corpus-scale shuffle
-    dl = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_dl"),
-    )
-    total = dl.agg(F.sum("_dl").cast("double").alias("_ctot"))
-
-    qterms = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+"))
-        ).alias("_tok"),
-    )
+    dl = _doc_lengths(df, id_col, text_col)
+    total = dl.agg(F.sum(_counted(F.col("_dl"))).cast("double").alias("_ctot"))
+    qterms = _query_terms(queries, query_id_col, query_text_col)
     wanted = qterms.select("_tok").distinct()
-    matched = toks.join(wanted, "_tok", "left_semi")
+    matched = _doc_terms(df, id_col, text_col).join(wanted, "_tok", "left_semi")
     cf = matched.groupBy("_tok").agg(F.count(F.lit(1)).cast("double").alias("_cf"))
     # corpus-OOV query terms drop here (inner join vs cf > 0 by construction)
     qin = qterms.join(F.broadcast(cf.select("_tok")), "_tok")
@@ -1325,8 +1127,6 @@ def rm3_expand(
     RM1 aggregate runs over feedback-doc tokens only (a semi-join against
     the feedback ids bounds the explode), and the per-query model is
     fb_terms + |q| rows. Nothing corpus-scale shuffles twice."""
-    from pyspark.sql.window import Window
-
     from sycamore_spark.functions.partitioning import lineage_cut
 
     # QUERY-SCALE (queries x fb_docs rows) but its lineage is the whole
@@ -1363,10 +1163,7 @@ def rm3_expand(
 
     # p(w|d) over feedback docs only: semi-join bounds the explode
     fids = post.select(F.col("_fid").alias("_id")).distinct()
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("_tok"),
-    ).join(fids, "_id", "left_semi")
+    toks = _doc_terms(df, id_col, text_col).join(fids, "_id", "left_semi")
     tf = toks.groupBy("_id", "_tok").agg(F.count(F.lit(1)).alias("_tf"))
     dl = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("_dl"))
     pwd = tf.join(dl, "_id").select(
@@ -1389,12 +1186,7 @@ def rm3_expand(
         "_p", F.col("_rm1").cast("double") / F.col("_rt").cast("double")
     )
 
-    qterms = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col(query_text_col))), r"\s+"))
-        ).alias("_tok"),
-    )
+    qterms = _query_terms(queries, query_id_col, query_text_col)
     nq = qterms.groupBy("_qid").agg(F.count(F.lit(1)).alias("_nq"))
     orig = qterms.join(nq, "_qid").select(
         "_qid", "_tok",

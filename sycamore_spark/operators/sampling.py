@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sycamore_spark.functions.text import tokens
+
 _MOD = 1_000_000  # sampling resolution: fraction quantized to 1e-6
 
 # Separator for composite shard/sequence/bin ids. A printable separator
@@ -1032,7 +1034,7 @@ def _hashed_ngram_features(
     """
     toks = df.select(
         F.col(id_col).alias("_id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_ws"),
+        tokens(F.col(text_col)).alias("_ws"),
     )
     uni = F.col("_ws")
     feats = uni

@@ -1092,15 +1092,17 @@ def ann_store_apply_changes(
     union (encoded upserts) via dynamic partition overwrite, and a cell
     whose last row was deleted has its directory removed explicitly
     (dynamic overwrite cannot write an empty partition — without this the
-    stale files would survive). Returns the touched-cell count.
+    stale files would survive). Returns the touched-cell count. The
+    steps are ``functions.partitioning.fold_touched_buckets``; unlike the
+    postings and norms folds, a missing store is an error here.
 
     Scale contract: the delta id set is broadcast (batch-sized, the CDC
     contract — streaming/cdc.py maintain_snapshot_stream is the same
     shape over generic buckets); work and rewrite volume are ∝ touched
     cells, never the store. Store rows outside ``(id, codes, cell)`` plus
     whatever extra columns the delta carries must agree by name for the
-    union. The merged rows are localCheckpointed before the overwrite
-    (the write replaces the very files the plan reads).
+    union. The merged rows are lineage-cut before the overwrite (the
+    write replaces the very files the plan reads).
 
     A delta must carry each id at most ONCE: the same id twice (e.g. two
     U rows) would anti-join the old row once but union BOTH encoded rows,
@@ -1108,85 +1110,32 @@ def ann_store_apply_changes(
     (one batch-sized agg; callers with multi-event feeds collapse to a
     last-writer row first, as streaming/cdc.py does via seq_col).
 
-    The delta is localCheckpointed on entry (lazily — the touched-cell
+    The delta is lineage-cut on entry (lazily — the touched-cell
     probe is the first action and materializes it): this function
     references its lineage ~6 times (dup validation, the broadcast id set
     on both joins, encode, cell union), and a delta whose upstream is an
     expensive re-embed (the embed-CDC path) would otherwise re-run that
     work per reference. Batch-sized by contract, so materializing it is
-    cheap. ``prepared=True`` asserts the caller already localCheckpointed
+    cheap. ``prepared=True`` asserts the caller already cut
     and dup-validated the delta (multi-store fold callers), skipping the
     redundant entry work — identical results ONLY under that contract: an
     unchecked duplicate id silently leaves duplicate vectors in the store
     instead of raising, and an un-checkpointed non-deterministic delta can
     diverge between the references above."""
-    store = spark.read.parquet(store_dir)
-    if not prepared:
-        # lazy cut: the touched-cell probe below is the first action on the
-        # delta and materializes the checkpoint; the dup check rides the
-        # same probe job (r14 — was 2 extra jobs per non-prepared fold)
-        changes = changes.localCheckpoint(eager=False)
-    delta_ids = changes.select(F.col(id_col)).distinct()
-    ups = changes.filter(F.col(op_col) != delete_op).drop(op_col)
-    enc = ivf_pq_encode(
-        ups, centroids, codebooks, vec_col=vec_col, scale=scale,
-        cell_col=cell_col, codes_col=codes_col,
-    ).drop(vec_col)
-    old_cells = (
-        store.join(F.broadcast(delta_ids), id_col, "left_semi")
-        .select(cell_col).distinct()
-    )
-    new_cells = enc.select(cell_col).distinct()
-    probe = (
-        old_cells.unionByName(new_cells).distinct()
-        .select(F.lit("c").alias("_k"), F.col(cell_col).cast("string").alias("_v"))
-    )
-    if not prepared:
-        probe = (
-            changes.groupBy(F.col(id_col))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(5)
-            .select(F.lit("d").alias("_k"), F.col(id_col).cast("string").alias("_v"))
-            .unionByName(probe)
-        )
-    rows = probe.collect()
-    dup = [r[1] for r in rows if r[0] == "d"]
-    if dup:
-        raise ValueError(
-            f"delta carries duplicate {id_col} values "
-            f"{dup}: collapse each id to one final row "
-            f"(deterministic winner, e.g. max seq) before applying"
-        )
-    touched = sorted(int(r[1]) for r in rows if r[0] == "c")
-    if not touched:
-        return 0
-    keep = (
-        store.filter(F.col(cell_col).isin(touched))
-        .join(F.broadcast(delta_ids), id_col, "left_anti")
-    )
-    # lazy cut materialized by the survivors collect below (its distinct
-    # computes every partition), so the checkpoint piggybacks on a job
-    # that already had to run — 4 -> 3 jobs per fold, identical write
-    merged = keep.unionByName(
-        enc.filter(F.col(cell_col).isin(touched)).select(*keep.columns)
-    ).localCheckpoint(eager=False)
-    survivors = {r[0] for r in merged.select(cell_col).distinct().collect()}
-    (
-        merged.repartition(len(touched), F.col(cell_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(cell_col)
-        .parquet(store_dir)
-    )
-    emptied = [c for c in touched if c not in survivors]
-    if emptied:
-        from sycamore_spark.materialize import _hadoop_fs
+    from sycamore_spark.functions.partitioning import fold_touched_buckets
 
-        for c in emptied:
-            fs, p = _hadoop_fs(spark, f"{store_dir.rstrip('/')}/{cell_col}={c}")
-            fs.delete(p, True)
-    return len(touched)
+    store = spark.read.parquet(store_dir)  # a missing store is an error
+    return fold_touched_buckets(
+        store_dir,
+        store,
+        changes,
+        lambda ups: ivf_pq_encode(
+            ups, centroids, codebooks, vec_col=vec_col, scale=scale,
+            cell_col=cell_col, codes_col=codes_col,
+        ).select(*store.columns),
+        id_col, cell_col, op_col, delete_op,
+        prepared=prepared,
+    )
 
 
 # -- scalar quantization (SQ8): the zero-UDF compression path -----------------

@@ -816,7 +816,7 @@ def ngram_lm_score(
     def _bigrams(frame: DataFrame) -> DataFrame:
         t = frame.select(
             F.col(id_col).alias("_id"),
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_ws"),
+            T.tokens(F.col(text_col)).alias("_ws"),
         )
         return t.select(
             "_id",

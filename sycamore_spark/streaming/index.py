@@ -52,9 +52,7 @@ def maintain_index_stream(
     inside the same guarded batch, and the fold pair is content-
     idempotent, so the crash window between them converges on replay.
     Returns the started StreamingQuery."""
-    from pyspark.sql import functions as F
-
-    from sycamore_spark.functions.partitioning import overlap_jobs
+    from sycamore_spark.functions.partitioning import duplicate_ids, overlap_jobs
     from sycamore_spark.operators.retrieval import (
         index_apply_changes, norms_apply_changes,
     )
@@ -73,13 +71,7 @@ def maintain_index_stream(
         # is the first action and materializes it (one job per batch, not
         # two — r14).
         batch_df = batch_df.localCheckpoint(eager=False)
-        dup = (
-            batch_df.groupBy(F.col(id_col))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(5)
-            .collect()
-        )
+        dup = duplicate_ids(batch_df, id_col).collect()
         if dup:
             raise ValueError(
                 f"micro-batch carries duplicate {id_col} values "
