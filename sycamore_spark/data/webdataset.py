@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sycamore_spark.functions.partitioning import lineage_cut
+
 
 def write_webdataset(
     df: DataFrame,
@@ -112,7 +114,7 @@ def write_webdataset(
         .applyInPandas(_write, schema="shard string, path string, n_samples long, n_bytes long")
     )
     # materialize: the write happens inside the tasks
-    manifest = manifest.localCheckpoint(eager=True)
+    manifest = lineage_cut(manifest)
     return manifest
 
 

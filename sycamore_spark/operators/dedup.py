@@ -1486,7 +1486,7 @@ def paragraph_dedup(
         num_perm=num_perm, bands=bands, shingle_k=shingle_k,
     )
     removed = pairs.select(F.col("id_b").alias("_wid")).distinct()
-    spans = (
+    spans = lineage_cut(
         wins.join(removed, "_wid", "left_semi")
         .select(
             F.col("_did").alias(id_col),
@@ -1494,7 +1494,6 @@ def paragraph_dedup(
             (F.col("_widx") * P).cast("long").alias("span_start"),
             (F.col("_widx") * P + P).cast("long").alias("span_end"),
         )
-        .localCheckpoint(eager=True)
     )
     stats = wins.groupBy(F.col("_did").alias(id_col)).agg(
         F.count(F.lit(1)).cast("long").alias("n_windows")

@@ -36,10 +36,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.errors.exceptions.captured import AnalysisException
 
+from sycamore_spark import store
 from sycamore_spark.functions.local import collect_bounded, local_frame
-from sycamore_spark.functions.partitioning import fold_touched_buckets
+from sycamore_spark.functions.partitioning import fold_touched_buckets, lineage_cut
 from sycamore_spark.functions.text import terms
 
 
@@ -295,7 +295,7 @@ def best_snippets(
         # below (doc prefilter, per-pair semi-join, and typically the
         # caller's final join) don't each recompute the scoring plan —
         # branch-lineage recomputation, the round-6 dedup_cc lesson
-        pairs = pairs.localCheckpoint()
+        pairs = lineage_cut(pairs)
         want = pairs.select(
             F.col(query_id_col).alias("_qid"), F.col(id_col).alias("_id")
         ).distinct()
@@ -583,28 +583,6 @@ def bucketed_postings(
     )
 
 
-def _read_store(spark, store_dir: str, bucket_col: str):
-    """The bucketed store at ``store_dir``, or None when it holds no data:
-    never written, or every bucket dir emptied and removed by a fold
-    (Spark reports the latter as UNABLE_TO_INFER_SCHEMA). Every other read
-    failure propagates — folding into a store that exists but cannot be
-    read would rebuild the touched buckets from the delta alone and
-    overwrite the postings they held."""
-    from sycamore_spark.materialize import _hadoop_fs
-
-    try:
-        return spark.read.parquet(store_dir)
-    except AnalysisException as e:
-        cond = e.getCondition()
-        if cond == "PATH_NOT_FOUND":
-            return None
-        if cond == "UNABLE_TO_INFER_SCHEMA":
-            fs, p = _hadoop_fs(spark, f"{store_dir.rstrip('/')}/{bucket_col}=*")
-            if not fs.globStatus(p):
-                return None
-        raise
-
-
 def index_apply_changes(
     spark,
     index_dir: str,
@@ -647,7 +625,7 @@ def index_apply_changes(
     that skew df/rank instead of raising."""
     return fold_touched_buckets(
         index_dir,
-        _read_store(spark, index_dir, bucket_col),
+        store.read_store(spark, index_dir),
         changes,
         lambda ups: _term_freqs(ups, id_col, text_col).withColumn(
             bucket_col, _bucket(F.col("term"), n_buckets)
@@ -739,7 +717,7 @@ def norms_apply_changes(
     duplicate norms rows that skew n_docs/avgdl instead of raising)."""
     return fold_touched_buckets(
         norms_dir,
-        _read_store(spark, norms_dir, bucket_col),
+        store.read_store(spark, norms_dir),
         changes,
         lambda ups: doc_norms(
             ups, id_col=id_col, text_col=text_col, bucket_col=bucket_col, n_buckets=n_buckets
@@ -849,24 +827,18 @@ def rebucket_postings(
     the ANN retrain-and-swap: when vocabulary growth skews the term-hash
     buckets (or the bucket count must grow with the corpus), read the
     CURRENT version, recompute ``pmod(xxhash64(term), n_buckets)``, and
-    publish the result as the next version via the same
-    ``ann_store_publish`` machinery (the versioned layout is generic
-    over any partition column) — the swap is the atomic _committed
-    marker, concurrent readers keep the old layout until
-    ``ann_store_vacuum``. Posting CONTENT (term, df, rank, doc_id, tf)
-    is untouched: only physical placement changes, so a term lookup on
-    the new layout returns identical rows through a different (possibly
-    narrower) file listing.
+    publish the result as the next version (``sycamore_spark/store.py``;
+    the versioned layout is generic over any partition column): concurrent
+    readers keep the old layout until ``store.vacuum``. Posting CONTENT
+    (term, df, rank, doc_id, tf) is untouched: only physical placement
+    changes, so a term lookup on the new layout returns identical rows
+    through a different (possibly narrower) file listing.
 
     Shape: one column-recompute scan + the publish's ONE hash shuffle on
     the new bucket column — the same cost as a compaction pass."""
-    from sycamore_spark.operators.similarity import (
-        ann_store_current_dir, ann_store_publish,
-    )
-
-    cur = spark.read.parquet(ann_store_current_dir(spark, root))
+    cur = spark.read.parquet(store.current_dir(spark, root))
     out = cur.drop(bucket_col).withColumn(bucket_col, _bucket(F.col("term"), n_buckets))
-    return ann_store_publish(spark, root, out, cell_col=bucket_col)
+    return store.publish(spark, root, out.repartition(F.col(bucket_col)), bucket_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1127,8 +1099,6 @@ def rm3_expand(
     RM1 aggregate runs over feedback-doc tokens only (a semi-join against
     the feedback ids bounds the explode), and the per-query model is
     fb_terms + |q| rows. Nothing corpus-scale shuffles twice."""
-    from sycamore_spark.functions.partitioning import lineage_cut
-
     # QUERY-SCALE (queries x fb_docs rows) but its lineage is the whole
     # corpus-scale first-pass scoring; four downstream consumers would
     # re-run round 1 once each — cut it eagerly (materializes ~dozens of

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sycamore_spark import store
 from sycamore_spark.functions import vectors as V
 from sycamore_spark.functions.local import collect_bounded, local_frame
 from sycamore_spark.operators.profiling import key_skew_profile
@@ -1219,88 +1220,19 @@ def sq_topk(query_vec, encoded: DataFrame, vmin: list, step: list, k: int = 10,
 # -- versioned store: retrain-and-swap (the ANN lifecycle's last ops piece) ----
 
 
-def ann_store_versions(spark, root: str) -> dict:
-    """List the versioned ANN store's version numbers under ``root``
-    (layout: ``root/v=<n>/cell_id=.../...parquet``), split into
-    ``committed`` (a ``_committed`` marker exists — readable) and
-    ``pending`` (written but never committed: a crashed publish, invisible
-    to readers and safe to vacuum)."""
-    from sycamore_spark.materialize import _fs_exists, _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, root)
-    committed, pending = [], []
-    if fs.exists(p):
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("v="):
-                try:
-                    n = int(name[2:])
-                except ValueError:
-                    continue
-                dst = committed if _fs_exists(
-                    spark, f"{root.rstrip('/')}/v={n}/_committed"
-                ) else pending
-                dst.append(n)
-    return {"committed": sorted(committed), "pending": sorted(pending)}
-
-
-def ann_store_current_dir(spark, root: str) -> str:
-    """Resolve the CURRENT store version's directory: the highest committed
-    version. The commit point is the single-file CREATE of the
-    ``_committed`` marker (atomic on local FS and HDFS), so a reader
-    resolves either the old version or the new one, never a partial store
-    — and a reader that resolved the old path keeps reading it untouched
-    (old versions are retained until ``ann_store_vacuum``). This is the
-    materialize USE_STORED swap discipline (reference
-    lib/sycamore/sycamore/materialize.py:277 — success-marker-gated
-    re-read) applied to the serving index; a mutable pointer FILE was
-    rejected because overwrite-create is not atomic against a concurrent
-    reader on a raw local FS."""
-    vs = ann_store_versions(spark, root)["committed"]
-    if not vs:
-        raise LookupError(f"no committed store version under {root!r}")
-    return f"{root.rstrip('/')}/v={vs[-1]}"
+# The versions are the protocol of sycamore_spark/store.py.
+ann_store_versions = store.versions
+ann_store_current_dir = store.current_dir
+ann_store_vacuum = store.vacuum
 
 
 def ann_store_publish(
     spark, root: str, encoded: DataFrame, cell_col: str = "cell_id"
 ) -> int:
-    """Write ``encoded`` as the store's NEXT version and atomically commit
-    it: parquet partitionBy(``cell_col``) into ``root/v=<n+1>`` (picked
-    above every existing version dir, committed or not, so a concurrent
-    half-written publish is never clobbered), one repartition on the cell
-    column so each cell directory is one file (the compact layout), then
-    the ``_committed`` marker — the atomic cutover. Returns the new
-    version number."""
-    from sycamore_spark.materialize import _fs_write_text
-
-    vs = ann_store_versions(spark, root)
-    nxt = max(vs["committed"] + vs["pending"], default=-1) + 1
-    vdir = f"{root.rstrip('/')}/v={nxt}"
-    (
-        encoded.repartition(F.col(cell_col))
-        .write.partitionBy(cell_col)
-        .parquet(vdir)
-    )
-    _fs_write_text(spark, f"{vdir}/_committed", "1")
-    return nxt
-
-
-def ann_store_vacuum(spark, root: str, keep: int = 1) -> list[int]:
-    """Delete superseded versions, keeping the newest ``keep`` committed
-    ones plus nothing pending (crashed publishes go too). Run it only
-    after in-flight readers of old versions have drained — the retention
-    window is the operator's concurrency contract, exactly a lakehouse
-    VACUUM. Returns the removed version numbers."""
-    from sycamore_spark.materialize import delete_path
-
-    if keep < 1:
-        raise ValueError("keep must be >= 1 (the current version must survive)")
-    vs = ann_store_versions(spark, root)
-    drop = vs["committed"][:-keep] + vs["pending"]
-    for n in drop:
-        delete_path(spark, f"{root.rstrip('/')}/v={n}")
-    return sorted(drop)
+    """Publish ``encoded`` as the store's next committed version
+    (``store.publish``), partitioned by ``cell_col`` with one file per
+    cell directory (the compact layout). Returns the new version number."""
+    return store.publish(spark, root, encoded.repartition(F.col(cell_col)), cell_col)
 
 
 def ann_reindex(

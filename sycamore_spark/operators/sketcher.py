@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sycamore_spark.functions.partitioning import lineage_cut
 from sycamore_spark.operators import dedup
 
 
@@ -113,7 +114,7 @@ def rolling_sketch_pairs(df: DataFrame, id_col: str = "doc_id",
     )
     # materialize the (small, pairs-only) result through the cache, then
     # release it — persisted operators must not leak executor state
-    out = out.localCheckpoint(eager=True)
+    out = lineage_cut(out)
     sk.unpersist()
     return out
 

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sycamore_spark.functions.partitioning import lineage_cut
+
 _SEP = "\x1f"
 
 
@@ -150,9 +152,7 @@ def store_sync(
     # pid set) — checkpoint it once so the two aggregations + full-outer
     # join don't re-execute per branch; it is metadata-scale (one row per
     # document id, no payloads) by the algorithm's listing contract
-    j = src.join(groups, src["_sid"] == groups["_pid"], "full_outer").localCheckpoint(
-        eager=True
-    )
+    j = lineage_cut(src.join(groups, src["_sid"] == groups["_pid"], "full_outer"))
     doc_status = (
         F.when(~F.coalesce(F.col("_md_valid"), F.lit(False)), F.lit("missing_md_info"))
         .when(F.col("_pid").isNull(), F.lit("missing_os_record"))

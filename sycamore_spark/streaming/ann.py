@@ -15,11 +15,10 @@ against the batch gate's oracle):
   delta in 1 micro-batch or N yields the identical store when each id
   appears in one batch (the CDC-extract contract; feeds with intra-delta
   races need the sequence-ordered ``maintain_snapshot_stream`` instead).
-- **Replay safety**: a checkpoint-scoped high-water mark in the
-  ``_hwm`` sidecar skips re-delivered batches, and the fold itself is
-  content-idempotent (re-applying a batch deletes the rows it already
-  wrote and re-inserts identical ones), so even the
-  crash-between-state-and-hwm window converges.
+- **Replay safety**: the store's replay mark (``sycamore_spark/store.py``)
+  skips re-delivered batches, and the fold itself is content-idempotent
+  (re-applying a batch deletes the rows it already wrote and re-inserts
+  identical ones), so even the crash window before the mark converges.
 
 Scale: per-batch work is proportional to the touched cells, never the
 store — see ``ann_store_apply_changes``'s contract.
@@ -29,8 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from sycamore_spark.materialize import _fs_write_text
-from sycamore_spark.streaming.cdc import _read_hwm
+from sycamore_spark import store
 
 
 def maintain_ann_store_stream(
@@ -53,23 +51,9 @@ def maintain_ann_store_stream(
     from sycamore_spark.operators.similarity import ann_store_apply_changes
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        hwm = _read_hwm(spark, store_dir)
-        if hwm is not None and hwm[0] == checkpoint_dir and batch_id <= hwm[1]:
-            return  # replayed batch: already applied
         ann_store_apply_changes(
-            spark, store_dir, batch_df, centroids, codebooks,
+            batch_df.sparkSession, store_dir, batch_df, centroids, codebooks,
             id_col=id_col, vec_col=vec_col, op_col=op_col, delete_op=delete_op,
         )
-        _fs_write_text(
-            spark, store_dir.rstrip("/") + "/_hwm", f"{checkpoint_dir}\n{batch_id}"
-        )
 
-    writer = (
-        changes.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return store.start_fold(changes, _fold, checkpoint_dir, available_now, mark_dir=store_dir)

@@ -26,17 +26,14 @@ snapshot, not the whole table — the parquet-native analogue of a
 transactional MERGE INTO (Delta/Iceberg), which is the drop-in upgrade
 at cluster scale.
 
-All state-dir probes and the high-water-mark sidecar go through the
-Hadoop FS API (``materialize._fs_exists`` etc.), so ``hdfs://`` /
-``s3a://`` / ``file://`` state dirs behave identically to local paths —
-a driver-local ``os.path`` probe would silently take the no-prior-state
-branch on every batch for URI schemes and discard the snapshot.
-
-Restart safety: a checkpoint-scoped high-water mark in the ``_hwm``
-sidecar (written AFTER the state commit) — a replayed batch (state write
-committed, checkpoint commit lost) is skipped; and because latest-wins
-merge of an already-folded batch is content-idempotent, even the
-crash-between-state-and-hwm window re-merges to the identical snapshot.
+Restart safety is the replay mark of ``sycamore_spark/store.py``
+(``start_fold`` with ``mark_dir``): a replayed batch skips before any
+job, and latest-wins merge of an already-folded batch is
+content-idempotent, so the crash window between the state write and the
+mark re-merges to the identical snapshot. The prior state is read with
+``store.read_store`` (a missing snapshot is empty, any other read error
+raises) through the Hadoop FS, so ``hdfs://`` / ``s3a://`` / ``file://``
+state dirs behave like local paths.
 """
 
 from __future__ import annotations
@@ -44,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sycamore_spark.materialize import _fs_exists, _fs_read_text, _fs_write_text
+from sycamore_spark import store
+from sycamore_spark.functions.partitioning import lineage_cut
 from sycamore_spark.operators.cdc import apply_changes
 
 _BUCKET = "_bucket"
@@ -52,14 +50,6 @@ _BUCKET = "_bucket"
 
 def _bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-
-
-def _read_hwm(spark, state_dir: str) -> tuple[str, int] | None:
-    path = state_dir.rstrip("/") + "/_hwm"
-    if not _fs_exists(spark, path):
-        return None
-    ckpt, _, bid = _fs_read_text(spark, path).rpartition("\n")
-    return ckpt, int(bid)
 
 
 def maintain_snapshot_stream(
@@ -91,52 +81,28 @@ def maintain_snapshot_stream(
         # bounded collect: at most n_buckets rows
         touched = [r[0] for r in batch_df.select(_BUCKET).distinct().collect()]
         if not touched:
-            return  # empty batch: nothing to merge, HWM unchanged is fine
-        # the _hwm sidecar (written after each state commit) is the
-        # prior-state marker: dynamic partition overwrite does NOT write a
-        # root _SUCCESS file, so probing _SUCCESS would silently take the
-        # no-prior-state branch on every batch after the first
-        hwm = _read_hwm(spark, state_dir)
-        if hwm is not None:
-            if hwm[0] == checkpoint_dir and batch_id <= hwm[1]:
-                return  # replayed batch: already merged
-            old = spark.read.parquet(state_dir).filter(F.col(_BUCKET).isin(touched))
-            merged = apply_changes(
-                old, batch_df, key_cols, seq_col,
-                op_col=op_col, delete_op=delete_op, keep_deletes=True,
-            )
-        else:
-            merged = apply_changes(
-                batch_df.limit(0), batch_df, key_cols, seq_col,
-                op_col=op_col, delete_op=delete_op, keep_deletes=True,
-            )
+            return  # empty batch: nothing to merge
+        old = store.read_store(spark, state_dir)
+        old = batch_df.limit(0) if old is None else old.filter(F.col(_BUCKET).isin(touched))
+        merged = apply_changes(
+            old, batch_df, key_cols, seq_col,
+            op_col=op_col, delete_op=delete_op, keep_deletes=True,
+        )
         # cut lineage first: the dynamic overwrite below replaces the very
         # bucket files the merged plan reads
         (
-            merged.localCheckpoint(eager=True)
+            lineage_cut(merged, eager=True)
             .repartition(len(touched), _BUCKET)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(_BUCKET)
             .parquet(state_dir)
         )
-        _fs_write_text(
-            spark, state_dir.rstrip("/") + "/_hwm", f"{checkpoint_dir}\n{batch_id}"
-        )
 
-    writer = (
-        changes.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return store.start_fold(changes, _fold, checkpoint_dir, available_now, mark_dir=state_dir)
 
 
 def read_snapshot(spark, state_dir: str, op_col: str = "op", delete_op: str = "D") -> DataFrame:
     """The live snapshot: tombstones and bookkeeping columns removed."""
     df = spark.read.parquet(state_dir)
-    return df.filter(F.col(op_col) != F.lit(delete_op)).drop(
-        _BUCKET, "_hwm_batch", "_hwm_ckpt"
-    )
+    return df.filter(F.col(op_col) != F.lit(delete_op)).drop(_BUCKET)

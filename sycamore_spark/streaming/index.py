@@ -12,10 +12,10 @@ snapshots), with the same correctness properties:
 - **Batch-boundary independence for disjoint-id batches**: each doc id
   appears in one micro-batch (the CDC-extract contract; racing feeds
   collapse to a last-writer row first).
-- **Replay safety**: the checkpoint-scoped ``_hwm`` sidecar skips
-  re-delivered batches, and the fold is content-idempotent (re-applying
-  a batch deletes the postings it already wrote and re-derives
-  identical ones).
+- **Replay safety**: the index's replay mark (``sycamore_spark/store.py``)
+  skips re-delivered batches, and the fold is content-idempotent
+  (re-applying a batch deletes the postings it already wrote and
+  re-derives identical ones).
 
 Scale: per-batch work is proportional to the touched buckets, never the
 index — see ``index_apply_changes``'s contract.
@@ -25,8 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from sycamore_spark.materialize import _fs_write_text
-from sycamore_spark.streaming.cdc import _read_hwm
+from sycamore_spark import store
 
 
 def maintain_index_stream(
@@ -52,16 +51,13 @@ def maintain_index_stream(
     inside the same guarded batch, and the fold pair is content-
     idempotent, so the crash window between them converges on replay.
     Returns the started StreamingQuery."""
-    from sycamore_spark.functions.partitioning import duplicate_ids, overlap_jobs
+    from sycamore_spark.functions.partitioning import duplicate_ids, lineage_cut, overlap_jobs
     from sycamore_spark.operators.retrieval import (
         index_apply_changes, norms_apply_changes,
     )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        hwm = _read_hwm(spark, index_dir)
-        if hwm is not None and hwm[0] == checkpoint_dir and batch_id <= hwm[1]:
-            return  # replayed batch: already applied
         # Checkpoint + dup-validate the micro-batch ONCE here (both folds
         # reference the delta several times; before, each fold re-ran the
         # checkpoint and the dup check on the same rows), then fold the two
@@ -70,7 +66,7 @@ def maintain_index_stream(
         # stage tails. The checkpoint is LAZY: the dup-check collect below
         # is the first action and materializes it (one job per batch, not
         # two — r14).
-        batch_df = batch_df.localCheckpoint(eager=False)
+        batch_df = lineage_cut(batch_df, eager=False)
         dup = duplicate_ids(batch_df, id_col).collect()
         if dup:
             raise ValueError(
@@ -94,15 +90,5 @@ def maintain_index_stream(
                 )
             )
         overlap_jobs(*folds)
-        _fs_write_text(
-            spark, index_dir.rstrip("/") + "/_hwm", f"{checkpoint_dir}\n{batch_id}"
-        )
 
-    writer = (
-        changes.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return store.start_fold(changes, _fold, checkpoint_dir, available_now, mark_dir=index_dir)

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from sycamore_spark import store
+
 
 def stream_from_directory(spark: SparkSession, path: str, schema: StructType,
                           fmt: str = "parquet", max_files_per_trigger: int | None = None) -> DataFrame:
@@ -85,21 +87,13 @@ def dedup_append_sink(
     ``await_seconds`` is given with an availableNow-style source).
     """
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates([key_col])
-        try:
-            corpus = spark.read.parquet(out_dir).select(F.col(key_col)).distinct()
-            fresh = fresh.join(corpus, key_col, "left_anti")
-        except Exception:
-            pass  # first batch: no corpus yet
+        corpus = store.read_store(batch_df.sparkSession, out_dir)
+        if corpus is not None:  # None: first batch, no corpus yet
+            fresh = fresh.join(corpus.select(key_col).distinct(), key_col, "left_anti")
         fresh.write.mode("append").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = store.start_fold(stream, handle, checkpoint)
     if await_seconds:
         q.awaitTermination(await_seconds)
     return q

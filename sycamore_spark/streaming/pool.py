@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from sycamore_spark.materialize import _fs_exists
+from sycamore_spark import store
 
 
 def maintain_instruction_pool_stream(
@@ -53,10 +53,9 @@ def maintain_instruction_pool_stream(
 
         from sycamore_spark.operators.dedup import instruction_pool_filter
 
-        spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col)
-        if _fs_exists(spark, pool_dir.rstrip("/") + "/_SUCCESS"):
-            pool = spark.read.parquet(pool_dir)
+        pool = store.read_store(batch_df.sparkSession, pool_dir)
+        if pool is not None:
             replayed = (
                 pool.where(
                     (F.col("_ckpt") == checkpoint_dir)
@@ -83,11 +82,4 @@ def maintain_instruction_pool_stream(
             .parquet(pool_dir)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return store.start_fold(stream, _fold, checkpoint_dir, available_now)

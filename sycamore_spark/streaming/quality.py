@@ -12,14 +12,10 @@ bigint counter states.
 Because the counters are additive, the final state is INDEPENDENT of
 micro-batch boundaries: ingesting in 1 batch or 50 yields identical
 counts, which is exactly what the oracle gate checks against a full-table
-batch recompute. State layout and restart safety are the stats.py
-versioned-state protocol (r14): each fold writes a new ``v=<n>`` version
-and atomically swaps the ``_current`` pointer — one Spark job per batch
-(no lineage-cut job, no state-probe job), replayed batches skip on the
-pointer's high-water mark, and the old version stays readable until the
-swap commits. Read the live state with ``read_state``. At cluster scale
-the versioned parquet write becomes a transactional MERGE
-(Delta/Iceberg); the state is one row per group either way.
+batch recompute. State layout and restart safety are the stats fold's:
+``store.versioned_state_fold``, one Spark job per batch, replayed batches
+skip on the current version's mark. Read the live state with
+``read_state``.
 """
 
 from __future__ import annotations
@@ -28,7 +24,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from sycamore_spark.streaming.stats import read_state, versioned_state_fold  # noqa: F401
+from sycamore_spark import store
+from sycamore_spark.streaming.stats import read_state  # noqa: F401
 
 
 def maintain_quality_stream(
@@ -84,16 +81,9 @@ def maintain_quality_stream(
                 )
             )
 
-        versioned_state_fold(
+        store.versioned_state_fold(
             spark, state_dir, checkpoint_dir, batch_id, make_merged,
             n_state_partitions=n_state_partitions,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return store.start_fold(stream, _fold, checkpoint_dir, available_now)

@@ -9,103 +9,32 @@ boundaries — ingesting the corpus in 1 batch or 50 yields bit-identical
 statistics, which is exactly what the oracle gate checks against a
 full-table recompute.
 
-State handling (r14 — VERSIONED state with an atomic pointer swap): each
-fold writes the merged state to a NEW ``v=<n>`` directory, then swaps the
-``_current`` pointer file (checkpoint dir, batch id, version) and vacuums
-superseded versions. Compared with the previous in-place overwrite this
-
-- needs NO lineage cut (the write never replaces files its own plan
-  reads — the old version stays where it is), and NO per-batch
-  state-read probe job (the high-water mark lives in the pointer file,
-  read driver-side): ONE Spark job per micro-batch instead of three;
-- strictly improves the crash window: the old version is intact until
-  the pointer commit, so a crash mid-write leaves a readable state and
-  a replayed batch recomputes the same new version deterministically
-  (write mode is overwrite) before swapping.
-
-Restart safety is unchanged: a fold whose ``batch_id`` is at or below
-the pointer's mark (same checkpoint lineage — ids restart at 0 on a new
-checkpoint dir) is a replay and skips, making the fold idempotent
-(exactly-once state). Read the live state with ``read_state``. At
-cluster scale the same pattern targets a transactional table
-(Delta/Iceberg MERGE) instead of versioned parquet directories.
+State layout and restart safety are ``store.versioned_state_fold``
+(``sycamore_spark/store.py``): one Spark job per batch and no lineage
+cut, because the write never replaces files its plan reads. Read the
+live state with ``read_state``.
 """
 
 from __future__ import annotations
 
-import re
-from typing import Callable
-
 from pyspark.sql import DataFrame
 
-from sycamore_spark.materialize import _fs_exists, _fs_read_text, _fs_write_text, _hadoop_fs
+from sycamore_spark import store
 from sycamore_spark.operators.incremental import corpus_stats, merge_stats
-
-_POINTER = "_current"
-
-
-def _read_pointer(spark, state_dir: str) -> tuple[str, int, int] | None:
-    """(checkpoint_dir, last_batch_id, current_version) or None."""
-    path = state_dir.rstrip("/") + "/" + _POINTER
-    if not _fs_exists(spark, path):
-        return None
-    ckpt, bid, ver = _fs_read_text(spark, path).rsplit("\n", 2)
-    return ckpt, int(bid), int(ver)
+from sycamore_spark.store import versioned_state_fold
 
 
 def current_state_dir(spark, state_dir: str) -> str:
-    """Resolve the live state version directory via the pointer file."""
-    cur = _read_pointer(spark, state_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed state under {state_dir}")
-    return f"{state_dir.rstrip('/')}/v={cur[2]}"
+    """The live state version directory: the highest committed one."""
+    try:
+        return store.current_dir(spark, state_dir)
+    except LookupError:
+        raise FileNotFoundError(f"no committed state under {state_dir}") from None
 
 
 def read_state(spark, state_dir: str) -> DataFrame:
     """The live persisted state (one row per group)."""
     return spark.read.parquet(current_state_dir(spark, state_dir))
-
-
-def versioned_state_fold(
-    spark,
-    state_dir: str,
-    checkpoint_dir: str,
-    batch_id: int,
-    make_merged: Callable[[DataFrame | None], DataFrame],
-    n_state_partitions: int = 1,
-) -> None:
-    """One micro-batch fold under the versioned-state protocol: skip
-    replays (pointer mark, driver-side read — no job), build the merged
-    state from the current version (``make_merged(old)``, ``old`` None on
-    first fold), write it to the next ``v=<n>`` directory (ONE job), swap
-    the pointer, vacuum superseded versions. Shared by the stats and
-    quality folds."""
-    cur = _read_pointer(spark, state_dir)
-    if cur is not None and cur[0] == checkpoint_dir and batch_id <= cur[1]:
-        return  # replayed batch: contribution already folded
-    old = (
-        spark.read.parquet(f"{state_dir.rstrip('/')}/v={cur[2]}")
-        if cur is not None else None
-    )
-    new_ver = 0 if cur is None else cur[2] + 1
-    new_dir = f"{state_dir.rstrip('/')}/v={new_ver}"
-    # mode=overwrite: a crash after this write but before the pointer swap
-    # replays the batch, which deterministically rewrites the same version
-    make_merged(old).repartition(n_state_partitions).write.mode(
-        "overwrite"
-    ).parquet(new_dir)
-    _fs_write_text(
-        spark, state_dir.rstrip("/") + "/" + _POINTER,
-        f"{checkpoint_dir}\n{batch_id}\n{new_ver}",
-    )
-    # vacuum AFTER the swap: superseded versions only; a crash here just
-    # leaves stale dirs for the next fold's vacuum
-    fs, root = _hadoop_fs(spark, state_dir.rstrip("/"))
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        m = re.fullmatch(r"v=(\d+)", name)
-        if m and int(m.group(1)) != new_ver:
-            fs.delete(status.getPath(), True)
 
 
 def maintain_stats_stream(
@@ -118,10 +47,10 @@ def maintain_stats_stream(
     n_state_partitions: int = 1,
 ):
     """Start a foreachBatch query folding each micro-batch's additive
-    stats state into ``state_dir`` (versioned layout — see the module
-    docstring). Returns the StreamingQuery (caller awaits). Read the
-    final state with ``read_state(spark, state_dir)`` and derive
-    mean/stddev via ``finalize_stats``."""
+    stats state into ``state_dir`` (see the module docstring). Returns
+    the StreamingQuery (caller awaits). Read the final state with
+    ``read_state(spark, state_dir)`` and derive mean/stddev via
+    ``finalize_stats``."""
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -137,11 +66,4 @@ def maintain_stats_stream(
             n_state_partitions=n_state_partitions,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return store.start_fold(stream, _fold, checkpoint_dir, available_now)

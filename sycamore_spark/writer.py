@@ -165,7 +165,7 @@ def compact_partitioned_table(
             f"compact_partitioned_table cannot compact in place "
             f"({src_dir!r}): overwrite truncates dst before the lazy src "
             f"read runs. Write to a sibling dir and swap, or use "
-            f"ann_store_apply_changes' localCheckpoint discipline."
+            f"the lineage cut of functions.partitioning.fold_touched_buckets."
         )
     df = spark.read.parquet(src_dir)
     if files_per_partition <= 1:

@@ -132,6 +132,22 @@ def test_ann_reindex_retrains_and_swaps_on_drift(spark, tmp_path):
     assert ann_store_versions(spark, root)["committed"] == [0, 1]
 
 
+def _assert_versions(spark, root, committed: dict, pending: set, content) -> None:
+    """The versioned-store invariants against a model: the listing splits
+    committed and pending versions exactly, and the current version is
+    the highest committed one and holds its payload (``content`` of it)."""
+    vs = ann_store_versions(spark, root)
+    assert vs == {"committed": sorted(committed), "pending": sorted(pending)}
+    if committed:
+        cur = ann_store_current_dir(spark, root)
+        top = max(committed)
+        assert cur.endswith(f"/v={top}")
+        assert content(spark.read.parquet(cur)) == committed[top]
+    else:
+        with pytest.raises(LookupError):
+            ann_store_current_dir(spark, root)
+
+
 def test_versioned_store_random_op_sequences(spark, tmp_path):
     """Seeded randomized state-machine check (the repo's property layer for
     Spark-bound ops): any interleaving of publish / crashed-publish /
@@ -175,21 +191,79 @@ def test_versioned_store_random_op_sequences(spark, tmp_path):
                     for n in dropped:
                         committed.pop(n, None)
                     pending.clear()
-            vs = ann_store_versions(spark, root)
-            assert vs == {"committed": sorted(committed), "pending": sorted(pending)}
-            if committed:
-                cur = ann_store_current_dir(spark, root)
-                top = max(committed)
-                assert cur.endswith(f"/v={top}")
-                assert as_set(spark.read.parquet(cur)) == committed[top]
-            else:
-                with pytest.raises(LookupError):
-                    ann_store_current_dir(spark, root)
+            _assert_versions(spark, root, committed, pending, as_set)
         # stray non-version junk in root must not confuse the listing
         _fs_write_text(spark, f"{root}/notes.txt", "x")
         assert ann_store_versions(spark, root) == {
             "committed": sorted(committed), "pending": sorted(pending)
         }
+
+
+def test_state_fold_random_op_sequences(spark, tmp_path, monkeypatch):
+    """The same invariants through the stats/quality state fold
+    (streaming/stats.py versioned_state_fold), seeded: a crash between the
+    version write and its marker leaves the prior version current and the
+    next fold takes a higher number; a replayed batch id is a no-op; a new
+    checkpoint lineage folds; a stray ``v=x`` dir and a leftover hidden
+    temp file are ignored; each fold keeps the current and the previous
+    version and drops pending ones."""
+    import os
+    import random
+
+    from sycamore_spark import store
+    from sycamore_spark.streaming.stats import read_state, versioned_state_fold
+
+    rng = random.Random(43)
+    write_text = store._fs_write_text
+
+    def crash_before_marker(spark_, path, text):
+        if path.endswith("/_committed"):
+            raise RuntimeError("crash before the commit marker")
+        write_text(spark_, path, text)
+
+    def add(k):
+        def make(old):
+            if old is None:
+                return spark.createDataFrame([(k,)], "n long")
+            return old.select((F.col("n") + k).alias("n"))
+        return make
+
+    total_of = lambda df: [r.n for r in df.collect()]  # noqa: E731
+
+    for case in range(4):
+        root = str(tmp_path / f"state{case}")
+        committed: dict[int, list] = {}
+        pending: set[int] = set()
+        ckpt, bid, total = f"ck{case}", -1, 0
+        for step in range(rng.randint(5, 8)):
+            op = rng.choice(["fold", "crash", "replay", "lineage", "stray"])
+            nxt = max(list(committed) + list(pending), default=-1) + 1
+            k = rng.randint(1, 9)
+            if op == "lineage":  # batch ids restart at 0 under a new dir
+                ckpt, bid = f"ck{case}-{step}", -1
+            if op in ("fold", "lineage"):
+                versioned_state_fold(spark, root, ckpt, bid + 1, add(k))
+                bid, total = bid + 1, total + k
+                committed[nxt] = [total]
+                committed = {n: committed[n] for n in sorted(committed)[-2:]}
+                pending.clear()
+            elif op == "crash":
+                with monkeypatch.context() as m:
+                    m.setattr(store, "_fs_write_text", crash_before_marker)
+                    with pytest.raises(RuntimeError, match="commit marker"):
+                        versioned_state_fold(spark, root, ckpt, bid + 1, add(k))
+                pending.add(nxt)
+            elif op == "replay" and bid >= 0:
+                versioned_state_fold(spark, root, ckpt, rng.randint(0, bid), add(k))
+            elif op == "stray":
+                os.makedirs(f"{root}/v=x", exist_ok=True)
+                with open(f"{root}/v=x/part-0.parquet", "w") as f:
+                    f.write("junk")
+                with open(f"{root}/._committed.0123abcd.tmp", "w") as f:
+                    f.write("/ck\n99")
+            _assert_versions(spark, root, committed, pending, total_of)
+            if committed:
+                assert total_of(read_state(spark, root)) == [total]
 
 
 def test_ann_reindex_rejects_silent_prefix_training(spark, tmp_path):

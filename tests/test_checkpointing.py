@@ -8,6 +8,7 @@ durable path actually writes checkpoint data under the given directory.
 """
 
 import os
+import pathlib
 
 from pyspark.sql import functions as F
 
@@ -53,3 +54,20 @@ def test_canonical_docs_threads_checkpoint_dir(spark, tmp_path):
     out = canonical_docs(docs, pairs, checkpoint_dir=str(tmp_path / "cd_ckpt"))
     rows = {r["doc_id"]: (r["component"], r["is_canonical"]) for r in out.collect()}
     assert rows == {"a": ("a", True), "b": ("a", False), "z": ("z", True)}
+
+
+def test_lineage_cut_is_the_only_local_checkpoint():
+    """One cut policy: every lineage cut in the package and the tools goes
+    through ``functions/partitioning.lineage_cut``, which picks a durable
+    or a local checkpoint, so no call site can bypass it."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    policy = root / "sycamore_spark" / "functions" / "partitioning.py"
+    hits = [
+        f"{path.relative_to(root)}:{n}"
+        for top in ("sycamore_spark", "tools")
+        for path in sorted((root / top).rglob("*.py"))
+        if path != policy
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert hits == []

@@ -80,7 +80,7 @@ def test_streaming_maintenance_batch_boundary_independent(spark, tmp_path):
 
 def test_streaming_fold_is_replay_idempotent(spark, tmp_path):
     # a batch whose state version committed but whose checkpoint commit
-    # did not is re-run on restart; the _current pointer's mark must make
+    # did not is re-run on restart; the current version's mark must make
     # the re-fold a no-op (exactly-once state). Simulate by re-running the
     # whole stream against the SAME checkpoint dir (no new data -> no new
     # batches) and then faking a replay via the same checkpoint lineage.
@@ -93,12 +93,13 @@ def test_streaming_fold_is_replay_idempotent(spark, tmp_path):
         [("a", 10), ("a", 20), ("b", 5)], "source string, n_chars long"
     )
     df.repartition(2).write.parquet(src)
-    from sycamore_spark.streaming.stats import _read_pointer, read_state
+    from sycamore_spark import store
+    from sycamore_spark.streaming.stats import read_state
 
     stream = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
     maintain_stats_stream(stream, ["source"], "n_chars", state, ckpt).awaitTermination(120)
     st1 = {r.source: (r.n, r.sum) for r in read_state(spark, state).collect()}
-    hwm1 = _read_pointer(spark, state)[1]
+    hwm1 = store.read_mark(spark, state, store.versions(spark, state)["committed"][-1])[1]
 
     # restart on the same checkpoint: no new files, nothing re-folds
     stream2 = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
@@ -117,15 +118,35 @@ def test_streaming_fold_is_replay_idempotent(spark, tmp_path):
     assert hwm1 is not None
 
 
+def test_state_reader_keeps_previous_version_through_next_fold(spark, tmp_path):
+    """A reader that resolved the live version can still read it after
+    the next fold commits: the fold keeps the previous version."""
+    from sycamore_spark.streaming.stats import current_state_dir, versioned_state_fold
+
+    state = str(tmp_path / "held")
+
+    def put(n):
+        return lambda old: spark.createDataFrame([("a", n)], "g string, n long")
+
+    versioned_state_fold(spark, state, "ck", 0, put(1))
+    held = current_state_dir(spark, state)
+    reader = spark.read.parquet(held)  # resolved and listed before the fold
+    versioned_state_fold(spark, state, "ck", 1, put(2))
+    assert current_state_dir(spark, state) != held
+    assert [tuple(r) for r in reader.collect()] == [("a", 1)]
+
+
 def test_versioned_state_fold_protocol(spark, tmp_path):
-    """The r14 versioned-state protocol: each fold writes a NEW v=<n>
-    dir and only then swaps the _current pointer (the prior version is
-    intact until the commit — the crash-window property), replays skip
-    on the pointer mark, and superseded versions are vacuumed."""
+    """The versioned-state protocol: each fold writes a NEW v=<n> dir and
+    only then commits it with a marker carrying the replay mark (the
+    prior version is intact until the commit — the crash-window
+    property), replays skip on that mark, and versions older than the
+    previous one are vacuumed."""
     import os
 
+    from sycamore_spark import store
     from sycamore_spark.streaming.stats import (
-        _read_pointer, current_state_dir, read_state, versioned_state_fold,
+        current_state_dir, read_state, versioned_state_fold,
     )
 
     state = str(tmp_path / "vstate")
@@ -156,12 +177,12 @@ def test_versioned_state_fold_protocol(spark, tmp_path):
     versioned_state_fold(spark, state, ckpt, 0, mk([("a", 99)]))
     assert {r.g: r.n for r in read_state(spark, state).collect()} == {"a": 1}
 
-    # the next batch writes v=1 and vacuums v=0 after the swap
+    # the next batch commits v=1 and keeps v=0 as the previous version
     versioned_state_fold(spark, state, ckpt, 1, mk([("a", 2), ("b", 5)]))
     assert current_state_dir(spark, state).endswith("/v=1")
     assert {r.g: r.n for r in read_state(spark, state).collect()} == {"a": 3, "b": 5}
-    assert [d for d in os.listdir(state) if d.startswith("v=")] == ["v=1"]
-    assert _read_pointer(spark, state) == (ckpt, 1, 1)
+    assert sorted(d for d in os.listdir(state) if d.startswith("v=")) == ["v=0", "v=1"]
+    assert store.read_mark(spark, state, 1) == (ckpt, 1)
 
     # a NEW checkpoint lineage restarts batch ids at 0 but versions keep
     # counting — the fresh fold must not collide with the live version

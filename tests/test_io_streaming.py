@@ -331,6 +331,23 @@ def test_dedup_append_sink_builds_unique_corpus(spark, tmp_path):
     assert got.select("k").distinct().count() == 15
 
 
+def test_dedup_append_sink_fails_on_unreadable_corpus(spark, tmp_path):
+    """A corpus dir that holds data Spark cannot read is not an empty
+    corpus: the stream fails instead of appending the batch undeduped."""
+    from pyspark.errors import StreamingQueryException
+
+    from sycamore_spark.streaming.ingest import dedup_append_sink
+
+    src, out = str(tmp_path / "src"), tmp_path / "corpus"
+    spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(src)
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+    stream = spark.readStream.schema("k int, v string").parquet(src)
+    with pytest.raises(StreamingQueryException):
+        dedup_append_sink(stream, str(out), str(tmp_path / "ckpt"), key_col="k", await_seconds=120)
+    assert os.listdir(out) == ["part-00000.parquet"]  # nothing appended
+
+
 def test_streaming_cdc_snapshot_boundary_independent(spark, tmp_path):
     from sycamore_spark.streaming.cdc import maintain_snapshot_stream, read_snapshot
 
@@ -453,8 +470,9 @@ def test_streaming_stats_state_partitions(spark, tmp_path):
     cur = current_state_dir(spark, st)
     parts = [f for f in os.listdir(cur) if f.endswith(".parquet")]
     assert len(parts) == 3
-    # superseded versions vacuumed: only the live version dir remains
-    assert [d for d in os.listdir(st) if d.startswith("v=")] == [os.path.basename(cur)]
+    # older versions vacuumed: the previous and the live version remain
+    n = int(cur.rsplit("=", 1)[1])
+    assert sorted(d for d in os.listdir(st) if d.startswith("v=")) == [f"v={n - 1}", f"v={n}"]
     out = finalize_stats(read_state(spark, st))
     got = {r.g: (r.n, r.mean) for r in out.collect()}
     assert got[0] == (10, 22.5)  # values 0,5,...,45

@@ -5,7 +5,7 @@
   text and NULL text.
 - The touched-bucket folds and a store read run a pinned number of
   Spark jobs, so a refactor cannot add a job unnoticed.
-- Pointer, mark and marker files are replaced atomically: a leftover
+- Mark and marker files are replaced atomically: a leftover
   temp file from a crashed write changes nothing, and an overwrite
   leaves complete content and no temp file."""
 
@@ -33,8 +33,7 @@ from sycamore_spark.operators.similarity import (
     ivf_pq_encode,
     ivf_pq_train_arrays,
 )
-from sycamore_spark.streaming.cdc import _read_hwm
-from sycamore_spark.streaming.stats import _read_pointer
+from sycamore_spark.store import read_mark
 
 NB = 8
 EDGE_ROWS = [
@@ -157,32 +156,33 @@ def test_leftover_temp_file_changes_no_pointer(spark, tmp_path):
     """A crash mid-write leaves only a truncated hidden temp sibling;
     readers keep returning the committed content."""
     state = str(tmp_path / "state")
-    os.makedirs(state)
-    _fs_write_text(spark, f"{state}/_current", "/ckpt\n3\n7")
+    os.makedirs(f"{state}/v=7")
+    _fs_write_text(spark, f"{state}/v=7/_committed", "/ckpt\n3")
     _fs_write_text(spark, f"{state}/_hwm", "/ckpt\n3")
-    for name, partial in (("_current", "/ckpt\n4"), ("_hwm", "/ck")):
-        with open(f"{state}/.{name}.0123abcd.tmp", "w") as f:
+    for name, partial in (("v=7/._committed", "/ckpt\n4"), ("._hwm", "/ck")):
+        with open(f"{state}/{name}.0123abcd.tmp", "w") as f:
             f.write(partial)
-    assert _read_pointer(spark, state) == ("/ckpt", 3, 7)
-    assert _read_hwm(spark, state) == ("/ckpt", 3)
+    assert read_mark(spark, state, 7) == ("/ckpt", 3)
+    assert read_mark(spark, state) == ("/ckpt", 3)
 
 
 def test_pointer_overwrite_is_complete_and_leaves_no_temp(spark, tmp_path):
     state = str(tmp_path / "state")
-    os.makedirs(state)
-    # a pointer written by a plain checksummed create, as older code did
-    fs, p = _hadoop_fs(spark, f"{state}/_current")
+    version = f"{state}/v=0"
+    os.makedirs(version)
+    # a marker written by a plain checksummed create, as older code did
+    fs, p = _hadoop_fs(spark, f"{version}/_committed")
     stream = fs.create(p, True)
-    stream.write(bytearray(b"/ckpt\n0\n0"))
+    stream.write(bytearray(b"/ckpt\n0"))
     stream.close()
-    assert ".crc" in " ".join(_visible(state))
+    assert ".crc" in " ".join(_visible(version))
     for i in range(1, 4):
-        _fs_write_text(spark, f"{state}/_current", f"/ckpt\n{i}\n{i * 10}")
-        assert _read_pointer(spark, state) == ("/ckpt", i, i * 10)
-        assert _visible(state) == ["_current"]
+        _fs_write_text(spark, f"{version}/_committed", f"/ckpt\n{i}")
+        assert read_mark(spark, state, 0) == ("/ckpt", i)
+        assert _visible(version) == ["_committed"]
     _fs_write_text(spark, f"file://{state}/_hwm", "/other\n5")
-    assert _read_hwm(spark, state) == ("/other", 5)
-    assert _visible(state) == ["_current", "_hwm"]
+    assert read_mark(spark, state) == ("/other", 5)
+    assert _visible(state) == ["_hwm", "v=0"]
     # hidden from Spark listings: a parquet read of a store dir holding
     # a leftover temp file still works
     spark.range(3).write.parquet(str(tmp_path / "store"))

@@ -24,6 +24,7 @@ sys.path.insert(0, "/root/repo")
 
 import sycamore_spark as ss  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from sycamore_spark.functions.partitioning import lineage_cut  # noqa: E402
 
 N_BUCKETS = 64
 DELTA_ROWS = 2000
@@ -53,9 +54,7 @@ def main() -> None:
     spark = ss.init(app_name="sycamore-spark-skewstress")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from sycamore_spark.operators.retrieval import (
-        bucketed_postings, index_apply_changes,
-    )
+    from sycamore_spark.operators.retrieval import bucketed_postings, index_apply_changes
 
     docs = spark.read.parquet(f"{OUT}/documents.parquet").select("doc_id", "text")
     results: dict[str, dict] = {}
@@ -98,7 +97,7 @@ def main() -> None:
     for label, delta in (("uniform", uni_delta), ("hot", hot_delta)):
         idx = f"/tmp/skewstress-idx-{label}"
         build_index(idx)
-        d = delta.localCheckpoint(eager=True)
+        d = lineage_cut(delta)
         t0 = time.perf_counter()
         touched = index_apply_changes(spark, idx, d, n_buckets=N_BUCKETS)
         sec = round(time.perf_counter() - t0, 3)
@@ -169,7 +168,7 @@ def ann_section(spark, results: dict) -> None:
     for label, delta in (("uniform", uni_delta), ("hot", hot_delta)):
         store = f"/tmp/skewstress-ann-{label}"
         build_store(store)
-        d = delta.localCheckpoint(eager=True)
+        d = lineage_cut(delta)
         t0 = time.perf_counter()
         touched = ann_store_apply_changes(spark, store, d, cents, books)
         sec = round(time.perf_counter() - t0, 3)
