@@ -1,23 +1,29 @@
-"""Approximate-nearest-neighbor search over embedding columns.
+"""Nearest-neighbor search over embedding columns.
 
 Reference parity: ``QueryVectorDatabase`` delegates kNN to OpenSearch
 (reference: lib/sycamore/sycamore/query/operators/query_database.py;
 physical sycamore_operator.py:194). Here retrieval is an in-engine operator:
 
-- ``brute_force_topk`` — exact baseline: broadcast the (small) query set,
-  score every corpus row with native cosine expressions, rank with a
-  per-query window. One shuffle (the window), no cross-join materialization
-  beyond the scored rows.
-- ``ivf_topk`` — the 100 TB path: KMeans-partition the corpus into cells
-  (MLlib), route each query to its ``nprobe`` nearest cells, and only score
-  within routed cells. Corpus scan cost drops by ~ncells/nprobe.
+- ``brute_force_topk`` — exact baseline: the (small) query set ships to
+  every corpus partition as a numpy matrix, each Arrow batch keeps its
+  local top-k per query, and one per-query window ranks the survivors.
+- ``ivf_topk`` — k-means cells (seeded numpy k-means on a bounded driver
+  sample, one Arrow pass to assign the corpus), each query scored only
+  within its ``nprobe`` nearest cells: the scan drops by ~ncells/nprobe.
+- ``pq_*`` / ``ivf_pq_*`` — product quantization and IVF-PQ: integer-exact
+  codes, and one query path (``_adc_scored``) that routes each query to
+  its probed cells and scores their rows by ADC lookups in native codegen;
+  top-k, batch top-k, exact re-ranking and radius search only cut its
+  scored frame differently. ``ann_store_*`` / ``ann_reindex`` maintain
+  the cell-partitioned store.
+- ``sq_*`` — 8-bit scalar quantization, encode and search in pure codegen.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -48,7 +54,9 @@ def brute_force_topk(
     ``max_queries`` guard (default 100k ≈ 300 MB of float64 at d=384)
     raises before the collect rather than silently OOMing the driver; for
     corpus-vs-corpus similarity use the LSH/IVF paths instead
-    (``ivf_topk``, ``dedup.embedding_neardup_lsh``).
+    (``ivf_topk``, ``dedup.embedding_near_dup_pairs_lsh``). A duplicate
+    query id, a NULL query vector or a NULL element raises ``ValueError``
+    (``_collect_queries``, shared with the IVF-PQ batch searches).
 
     Shape: the (small, by contract) query set ships to every corpus
     partition as a numpy matrix; each Arrow batch scores ALL queries with
@@ -70,22 +78,15 @@ def brute_force_topk(
         StructField("rank", IntegerType()),
         StructField("score", DoubleType()),
     ])
-    # one job over the caller's frame (a limit().collect() can take two);
-    # the bound keeps driver memory capped even on a pathological input
-    q_rows = collect_bounded(
-        queries.select(
-            F.col(query_id).alias("query_id"), V.as_double(F.col(query_vec)).alias("_qv")
-        ),
-        max_queries,
-        f"brute_force_topk collects the query side to the driver; got "
-        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
-        f"the query set or use ivf_topk / the LSH near-dup path for "
-        f"corpus-sized query sets.",
+    q_rows = _collect_queries(
+        queries, query_id, query_vec, max_queries, "brute_force_topk",
+        "Chunk the query set or use ivf_topk / the LSH near-dup path for "
+        "corpus-sized query sets.",
     )
     if not q_rows:
         return local_frame(queries.sparkSession, [], out_type)
-    qids = [r["query_id"] for r in q_rows]
-    Q = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
+    qids = [qid for qid, _ in q_rows]
+    Q = np.array([v for _, v in q_rows], dtype=np.float64)
     if metric == "cosine":
         qn = np.sqrt((Q**2).sum(axis=1))
         descending = True
@@ -97,13 +98,7 @@ def brute_force_topk(
     qblob = pickle.dumps((qids, Q, qn))
 
     c = corpus.select(F.col(corpus_id).alias("neighbor_id"), V.as_double(F.col(corpus_vec)).alias("_cv"))
-    qid_field = queries.schema[query_id].dataType
-    nid_field = corpus.schema[corpus_id].dataType
-    out_schema = StructType([
-        StructField("query_id", qid_field),
-        StructField("neighbor_id", nid_field),
-        StructField("score", DoubleType()),
-    ])
+    out_schema = StructType([f for f in out_type.fields if f.name != "rank"])
 
     def run(it):
         qids_l, Qm, qn_l = pickle.loads(qblob)
@@ -415,8 +410,7 @@ def pq_train_arrays(
     """Codebook training on an in-memory matrix (the engine-independent
     core of ``pq_train`` — an oracle replicates codebooks by feeding the
     identical vectors through this same function)."""
-    X = np.asarray(X, dtype=float)
-    Xq = np.floor(X * scale + 0.5)
+    Xq = _quantize(X, scale).astype(float)
     d = Xq.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -438,28 +432,13 @@ def pq_encode(
     """Attach each row's PQ codes (array<int>, one code per subspace):
     argmin integer squared distance to the subspace codebook — first-min
     tie-break, matching a SQL list_position(min) replay. One Arrow pass,
-    zero shuffle; the corpus shrinks from d floats to m bytes per row."""
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    B = [np.array(b, dtype=np.int64) for b in codebooks]
-    sub = _uniform_subdim(B)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _enc(vs: pd.Series) -> pd.Series:
-        out = []
-        for v in vs:
-            if v is None:
-                out.append(None)
-                continue
-            x = np.floor(np.asarray(v, dtype=float) * scale + 0.5).astype(np.int64)
-            codes = []
-            for s, Bs in enumerate(B):
-                diff = Bs - x[s * sub:(s + 1) * sub]
-                codes.append(int((diff * diff).sum(axis=1).argmin()))
-            out.append(codes)
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _enc(F.col(vec_col)))
+    zero shuffle; the corpus shrinks from d floats to m bytes per row.
+    This is ``ivf_pq_encode`` with one all-zero cell, whose residual is
+    the vector itself."""
+    enc = ivf_pq_encode(
+        df.drop(out_col), _zero_cell(codebooks), codebooks, vec_col, scale, _PQ_CELL, out_col
+    )
+    return enc.select(*df.columns, *([] if out_col in df.columns else [out_col]))
 
 
 def pq_topk(
@@ -471,32 +450,25 @@ def pq_topk(
     codes_col: str = "pq_codes",
     scale: float = 1024.0,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: the query's per-
-    subspace lookup table (int64 sqdist to each centroid) is computed
-    driver-side and inlined as literal arrays; each row's score is m
-    element_at lookups + an integer sum — native codegen, no UDF — and the
-    global top-k compiles to TakeOrderedAndProject (per-partition heads +
-    k-row driver merge). Deterministic ties by id. Rows without codes
-    (pq_encode emits null for null embeddings) are excluded up front —
-    Spark's ascending sort is NULLS FIRST, so an unfiltered null code
-    would otherwise displace real neighbors from the top-k."""
-    q = np.floor(np.asarray(list(query_vec), dtype=float) * scale + 0.5).astype(np.int64)
-    score = None
-    for s, b in enumerate(codebooks):
-        Bs = np.array(b, dtype=np.int64)
-        sub = Bs.shape[1]
-        diff = Bs - q[s * sub:(s + 1) * sub]
-        lut = (diff * diff).sum(axis=1).tolist()
-        term = F.element_at(
-            F.array(*[F.lit(int(v)) for v in lut]), F.col(codes_col)[s] + 1
-        )
-        score = term if score is None else score + term
-    return (
-        encoded.filter(F.col(codes_col).isNotNull())
-        .select(id_col, score.cast("bigint").alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
+    """Asymmetric-distance (ADC) top-k over PQ codes: ``ivf_pq_topk`` with
+    one all-zero cell, so the query's lookup table (int64 sqdist of each
+    subvector to each centroid) is built driver-side and inlined as a
+    literal, each row's score is m element_at lookups + an integer sum —
+    native codegen, no UDF — and the global top-k compiles to
+    TakeOrderedAndProject. Deterministic ties by id; rows without codes
+    (null embeddings) are excluded."""
+    return ivf_pq_topk(
+        query_vec, encoded.withColumn(_PQ_CELL, F.lit(0)), _zero_cell(codebooks),
+        codebooks, k, 1, id_col, _PQ_CELL, codes_col, scale,
     )
+
+
+# The single cell of plain PQ: an all-zero centroid, so residual == vector.
+_PQ_CELL = "__pq_cell"
+
+
+def _zero_cell(codebooks: list) -> list:
+    return [[0] * sum(len(b[0]) for b in codebooks)]
 
 
 # -- IVF-PQ (coarse cells + PQ-compressed residuals, the full 100 TB ANN) -----
@@ -554,8 +526,7 @@ def ivf_pq_train_arrays(
     int64 arithmetic — order-independent and bit-replayable by a SQL
     oracle. Returns (centroids, codebooks): ncells x d and m lists of
     subk x (d/m) integer lists."""
-    X = np.asarray(X, dtype=float)
-    Xq = np.floor(X * scale + 0.5).astype(np.int64)
+    Xq = _quantize(X, scale)
     d = Xq.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -623,7 +594,6 @@ def ivf_pq_encode(
 
     C = np.array(centroids, dtype=np.int64)
     B = [np.array(b, dtype=np.int64) for b in codebooks]
-    m = len(B)
     sub = _uniform_subdim(B)
     out_schema = StructType(
         list(df.schema.fields)
@@ -638,22 +608,161 @@ def ivf_pq_encode(
                     cells.append(None)
                     codes_out.append(None)
                     continue
-                x = np.floor(np.asarray(v, dtype=float) * scale + 0.5).astype(np.int64)
-                diff = C - x
-                c = int((diff * diff).sum(axis=1).argmin())
+                x = _quantize(v, scale)
+                c = int(((C - x) ** 2).sum(axis=1).argmin())
                 r = x - C[c]
-                codes = []
-                for s in range(m):
-                    db = B[s] - r[s * sub:(s + 1) * sub]
-                    codes.append(int((db * db).sum(axis=1).argmin()))
                 cells.append(c)
-                codes_out.append(codes)
+                codes_out.append([
+                    int(((b - r[s * sub:(s + 1) * sub]) ** 2).sum(axis=1).argmin())
+                    for s, b in enumerate(B)
+                ])
             pdf = pdf.copy()
             pdf[cell_col] = pd.array(cells, dtype="Int32")
             pdf[codes_col] = pd.Series(codes_out, index=pdf.index, dtype=object)
             yield pdf
 
     return df.mapInPandas(run, schema=out_schema)
+
+
+# -- the IVF-PQ query path ----------------------------------------------------
+#
+# Every PQ search entry point, ``pq_topk`` included, builds its scored
+# frame with ``_adc_scored`` and differs only in how it cuts that frame.
+
+
+def _quantize(v, scale: float) -> np.ndarray:
+    """floor(x*scale+0.5) as int64: the integer space of every PQ model,
+    code and ADC distance (so all of them replay exactly in SQL)."""
+    return np.floor(np.asarray(v, dtype=float) * scale + 0.5).astype(np.int64)
+
+
+def _check_query(qid, v, dim: int | None = None) -> None:
+    """Reject a query vector that cannot be scored, naming the query: a
+    NULL vector or element would quantize to garbage (or overflow inside
+    Spark), and a vector of another length than the model's cannot be
+    routed. ``qid=None`` is a single-vector search."""
+    if v is None:
+        problem = "is NULL"
+    elif None in v:
+        problem = "has a NULL element"
+    elif dim is not None and len(v) != dim:
+        problem = f"has {len(v)} elements, the model has {dim}"
+    else:
+        return
+    raise ValueError(f"query vector{'' if qid is None else f' of query id {qid!r}'} {problem}")
+
+
+def _collect_queries(
+    queries: DataFrame, query_id: str, query_vec: str, max_queries: int, who: str,
+    hint: str = "Chunk the query set.",
+) -> list:
+    """The query frame as [(qid, vector)], collected in one bounded job
+    (the ``brute_force_topk`` contract). A duplicate query id raises: it
+    would score every probed row twice and fill the top-k with repeated
+    ids. So does a NULL vector or element (``_check_query``)."""
+    rows = collect_bounded(
+        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv")),
+        max_queries,
+        f"{who} collects the query side to the driver; got >{max_queries} "
+        f"query rows (max_queries={max_queries}). {hint}",
+    )
+    seen = set()
+    for qid, v in rows:
+        if qid in seen:
+            raise ValueError(f"duplicate query id {qid!r} in the query set")
+        seen.add(qid)
+        _check_query(qid, v)
+    return rows
+
+
+def _bigints(values) -> Column:
+    """An array<bigint> literal parsed from one SQL string: one call into
+    the JVM, where a ``F.lit`` per element costs a round trip each."""
+    return F.expr(f"array({', '.join(f'{int(v)}L' for v in values)})")
+
+
+def _adc_scored(
+    encoded: DataFrame, q_rows: list, qid_type: str | None, centroids: list,
+    codebooks: list, nprobe: int, id_col: str, cell_col: str, codes_col: str,
+    scale: float, prefilter=None, vec_col: str | None = None,
+) -> DataFrame:
+    """The IVF-PQ probe builder and ADC scorer behind every PQ search.
+
+    Driver side, per query of ``q_rows`` ([(qid, vector)]): quantize, route
+    to the ``nprobe`` nearest cells (stable sort: ties go to the lower
+    cell) and build one flat LUT per probed cell — int64 sqdist of the
+    query's residual in that cell to every codebook centroid, subspace
+    blocks concatenated. Scan side: rows of the probed cells (a static
+    list, so a partitionBy(cell) store prunes at file listing) with codes
+    that pass ``prefilter``; each scores as m ``element_at`` lookups at
+    cumulative block offsets (codebook lengths may differ per subspace)
+    plus an integer sum, all native codegen. The LUT reaches the rows
+    from a LocalRelation probe table broadcast-joined on the cell for a
+    query frame (``qid_type`` = the query id's DDL type), or from a
+    literal cell -> LUT map for one vector (``qid_type=None``), where a
+    broadcast would cost the search a second job.
+
+    Returns ``([_qid,] id_col, adc_dist[, _v, _qq])``: ``_qid`` for a query
+    frame; with ``vec_col`` the row's vector ``_v`` and the quantized
+    query ``_qq`` for ``_exact_dist``."""
+    C = np.array(centroids, dtype=np.int64)
+    B = [np.array(b, dtype=np.int64) for b in codebooks]
+    sub = _uniform_subdim(B)
+    probes = []  # (qid, cell, flat LUT, quantized query)
+    for qid, v in q_rows:
+        _check_query(qid, v, C.shape[1])
+        q = _quantize(v, scale)
+        for c in np.argsort(((C - q) ** 2).sum(axis=1), kind="stable")[:nprobe]:
+            r = q - C[c]
+            lut = np.concatenate(
+                [((b - r[s * sub:(s + 1) * sub]) ** 2).sum(axis=1) for s, b in enumerate(B)]
+            )
+            probes.append((qid, int(c), lut.tolist(), q.tolist()))
+    cells = sorted({c for _, c, _, _ in probes})
+    rows = encoded.filter(
+        (F.col(cell_col).isin(cells) if cells else F.lit(False))
+        & F.col(codes_col).isNotNull()
+        & (prefilter if prefilter is not None else F.lit(True))
+    )
+    if qid_type is None:
+        # its own projection: one map lookup per row, one map literal per plan
+        cell_luts = F.create_map(*[x for _, c, t, _ in probes for x in (F.lit(c), _bigints(t))])
+        rows = rows.withColumn("_lut", F.element_at(cell_luts, F.col(cell_col).cast("int")))
+        head, qq = [], (_bigints(q) if vec_col else None)  # q: the one query
+    else:
+        ddl = f"_qid {qid_type}, {cell_col} int, _lut array<bigint>"
+        if vec_col:
+            ddl += ", _qq array<bigint>"
+        table = local_frame(encoded.sparkSession, [p if vec_col else p[:3] for p in probes], ddl)
+        rows = rows.join(F.broadcast(table), cell_col)
+        head, qq = ["_qid"], F.col("_qq")
+    adc, offset = None, 0
+    for s, b in enumerate(B):
+        term = F.element_at(F.col("_lut"), F.lit(offset) + F.col(codes_col)[s] + 1)
+        adc = term if adc is None else adc + term
+        offset += len(b)
+    refine = [F.col(vec_col).alias("_v"), qq.alias("_qq")] if vec_col else []
+    return rows.select(*head, id_col, adc.cast("bigint").alias("adc_dist"), *refine)
+
+
+def _exact_dist(scale: float) -> Column:
+    """Exact squared L2 between ``_v``, quantized like the query, and the
+    quantized query ``_qq``: zip_with/aggregate over int64, native codegen."""
+    xq = F.transform(
+        V.as_double(F.col("_v")),
+        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
+    )
+    return F.aggregate(
+        F.zip_with(xq, F.col("_qq"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    ).alias("exact_dist")
+
+
+def _ranked(scored: DataFrame, k: int, by: str, id_col: str, rank_col: str = "rank") -> DataFrame:
+    """The first ``k`` rows per ``_qid`` by (``by``, id): one rank window."""
+    w = Window.partitionBy("_qid").orderBy(F.col(by).asc(), F.col(id_col).asc())
+    return scored.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
 def ivf_pq_topk(
@@ -670,13 +779,9 @@ def ivf_pq_topk(
     prefilter=None,
 ) -> DataFrame:
     """ADC top-k restricted to the query's ``nprobe`` nearest cells — the
-    composed IVF-PQ search: cell routing and the per-cell lookup tables
-    (int64 sqdist of the query's PER-CELL residual to each shared-codebook
-    centroid) are computed driver-side from kilobyte literals; the scan
-    filters to probed cells (partition pruning when the corpus is laid out
-    by cell_id), each surviving row's score is m lookups — element_at over
-    a cell-selected literal array — plus an integer sum, all native
-    codegen; and the global top-k compiles to TakeOrderedAndProject.
+    composed IVF-PQ search: ``_adc_scored`` routes the query and scores
+    the probed cells' rows from a literal cell -> LUT map in native
+    codegen, and the global top-k compiles to TakeOrderedAndProject.
     Deterministic ties by id; rows with null codes are excluded (NULLS
     FIRST would otherwise displace real neighbors).
 
@@ -689,57 +794,14 @@ def ivf_pq_topk(
     top-k is exact over the rows that satisfy the predicate (post-filter
     rank-then-drop would return fewer than k and miss qualifying
     neighbors ranked below the unfiltered top-k)."""
-    probed, score = _adc_probe(
-        query_vec, centroids, codebooks, nprobe, cell_col, codes_col, scale
-    )
     return (
-        encoded.filter(
-            F.col(cell_col).isin(probed) & F.col(codes_col).isNotNull()
-            & (prefilter if prefilter is not None else F.lit(True))
+        _adc_scored(
+            encoded, [(None, query_vec)], None, centroids, codebooks, nprobe,
+            id_col, cell_col, codes_col, scale, prefilter,
         )
-        .select(id_col, score.cast("bigint").alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc_nulls_last(), F.col(id_col).asc())
         .limit(k)
     )
-
-
-def _adc_probe(
-    query_vec, centroids: list, codebooks: list, nprobe: int,
-    cell_col: str, codes_col: str, scale: float,
-):
-    """Driver-side cell routing + the codegen ADC score expression shared
-    by ``ivf_pq_topk`` and ``ivf_pq_range_search``: quantize the query,
-    pick its ``nprobe`` nearest coarse cells, build the per-cell
-    per-subspace residual LUTs as kilobyte literals, and return
-    (probed_cells, score_column) where the score is m element_at lookups
-    + an integer sum — whole-stage codegen, no Python at scan time."""
-    C = np.array(centroids, dtype=np.int64)
-    B = [np.array(b, dtype=np.int64) for b in codebooks]
-    m = len(B)
-    sub = _uniform_subdim(B)
-    q = np.floor(np.asarray(list(query_vec), dtype=float) * scale + 0.5).astype(np.int64)
-    dc = ((C - q) ** 2).sum(axis=1)
-    probed = [int(c) for c in np.argsort(dc, kind="stable")[:nprobe]]
-    luts = {}  # cell -> per-subspace LUT over the query's residual IN that cell
-    for c in probed:
-        r = q - C[c]
-        luts[c] = [
-            ((B[s] - r[s * sub:(s + 1) * sub]) ** 2).sum(axis=1).tolist()
-            for s in range(m)
-        ]
-    score = None
-    for s in range(m):
-        lut_for_cell = None
-        for c in probed:
-            arr = F.array(*[F.lit(int(v)) for v in luts[c][s]])
-            lut_for_cell = (
-                F.when(F.col(cell_col) == c, arr)
-                if lut_for_cell is None
-                else lut_for_cell.when(F.col(cell_col) == c, arr)
-            )
-        term = F.element_at(lut_for_cell, F.col(codes_col)[s] + 1)
-        score = term if score is None else score + term
-    return probed, score
 
 
 def ivf_pq_range_search(
@@ -770,17 +832,10 @@ def ivf_pq_range_search(
     returned frame is UNORDERED (order it if presenting); same
     ``prefilter`` contract as ``ivf_pq_topk`` (conjoined before scoring,
     pushed into the scan)."""
-    probed, score = _adc_probe(
-        query_vec, centroids, codebooks, nprobe, cell_col, codes_col, scale
-    )
-    return (
-        encoded.filter(
-            F.col(cell_col).isin(probed) & F.col(codes_col).isNotNull()
-            & (prefilter if prefilter is not None else F.lit(True))
-        )
-        .select(id_col, score.cast("bigint").alias("adc_dist"))
-        .filter(F.col("adc_dist") <= int(radius))
-    )
+    return _adc_scored(
+        encoded, [(None, query_vec)], None, centroids, codebooks, nprobe,
+        id_col, cell_col, codes_col, scale, prefilter,
+    ).filter(F.col("adc_dist") <= int(radius))
 
 
 def ivf_pq_topk_multi(
@@ -802,14 +857,10 @@ def ivf_pq_topk_multi(
     """Batch IVF-PQ search — the serving shape: a whole DataFrame of
     queries against one encoded corpus. Per the ``brute_force_topk``
     contract the query side is collected to the driver (bounded by
-    ``max_queries``); each query's probe routing and per-cell lookup
-    tables are computed there (kilobytes per query: m*subk int64 per
-    probed cell) and shipped back as a small (query, cell, flat-LUT)
-    table that BROADCAST-joins the encoded corpus on cell_id. Scoring is
-    m ``element_at`` lookups into the LUT *column* plus an integer sum —
-    native codegen, no per-row Python — and the per-query top-k is one
-    rank window over rows already restricted to probed cells
-    (~nprobe/ncells of the corpus per query).
+    ``max_queries``); each query's routing and per-cell LUTs (m*subk
+    int64 per probed cell) ship back as a small (query, cell, flat-LUT)
+    table that BROADCAST-joins the encoded corpus on cell_id, and the
+    per-query top-k is one rank window over the probed cells' rows.
 
     Returns (query_id, id_col, rank, adc_dist); deterministic ties by id;
     rows with null codes are excluded. Integer-exact, so a SQL oracle
@@ -817,71 +868,14 @@ def ivf_pq_topk_multi(
     encoded corpus) is filtered vector search, same contract as
     ``ivf_pq_topk``: conjoined before scoring so it pushes into the scan
     and the per-query top-k is exact over qualifying rows."""
-    C = np.array(centroids, dtype=np.int64)
-    B = [np.array(b, dtype=np.int64) for b in codebooks]
-    m = len(B)
-    sub = _uniform_subdim(B)
-    q_rows = collect_bounded(
-        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv")),
-        max_queries,
-        f"ivf_pq_topk_multi collects the query side to the driver; got "
-        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
-        f"the query set.",
+    scored = _adc_scored(
+        encoded,
+        _collect_queries(queries, query_id, query_vec, max_queries, "ivf_pq_topk_multi"),
+        queries.schema[query_id].dataType.simpleString(), centroids, codebooks, nprobe,
+        id_col, cell_col, codes_col, scale, prefilter,
     )
-    seen_qids = set()
-    for r in q_rows:
-        if r["_qid"] in seen_qids:
-            # a duplicate qid would emit duplicate (query, cell, LUT) probe
-            # rows, the join would score every corpus row twice, and the
-            # rank window would fill the top-k with repeated ids — fail
-            # loudly instead of silently corrupting the result
-            raise ValueError(f"duplicate query id {r['_qid']!r} in the query set")
-        seen_qids.add(r["_qid"])
-    probe_rows = []
-    for r in q_rows:
-        q = np.floor(np.asarray(r["_qv"], dtype=float) * scale + 0.5).astype(np.int64)
-        dc = ((C - q) ** 2).sum(axis=1)
-        for c in np.argsort(dc, kind="stable")[:nprobe]:
-            rq = q - C[int(c)]
-            lut = np.concatenate([
-                ((B[s] - rq[s * sub:(s + 1) * sub]) ** 2).sum(axis=1) for s in range(m)
-            ])
-            probe_rows.append((r["_qid"], int(c), [int(v) for v in lut]))
-    probes = local_frame(
-        encoded.sparkSession, probe_rows,
-        f"_qid {queries.schema[query_id].dataType.simpleString()}, "
-        f"{cell_col} int, _lut array<bigint>",
-    )
-    # flat-LUT block offsets: cumulative, NOT s*subk — ragged codebooks
-    # (per-subspace lengths may differ) would otherwise index the wrong
-    # block and return silently wrong distances (r8 ADVICE)
-    offsets = [0]
-    for b in B:
-        offsets.append(offsets[-1] + b.shape[0])
-    score = None
-    for s in range(m):
-        term = F.element_at(F.col("_lut"), F.lit(offsets[s]) + F.col(codes_col)[s] + 1)
-        score = term if score is None else score + term
-    # The probed-cell UNION is known driver-side, so prune STATICALLY
-    # before the join: on a partitionBy(cell_id) store this is partition
-    # pruning at file-listing time (the broadcast join alone would list
-    # every cell and rely on the post-scan join to drop rows — at 100 TB
-    # that is the whole store scanned for a handful of probed cells).
-    probed_cells = sorted({int(c) for _, c, _ in probe_rows})
-    scored = (
-        encoded.filter(
-            (F.col(cell_col).isin(probed_cells) if probed_cells else F.lit(False))
-            & F.col(codes_col).isNotNull()
-            & (prefilter if prefilter is not None else F.lit(True))
-        )
-        .join(F.broadcast(probes), cell_col)
-        .select("_qid", id_col, score.cast("bigint").alias("adc_dist"))
-    )
-    w = Window.partitionBy("_qid").orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(query_id), id_col, "rank", "adc_dist")
+    return _ranked(scored, k, "adc_dist", id_col).select(
+        F.col("_qid").alias(query_id), id_col, "rank", "adc_dist"
     )
 
 
@@ -912,50 +906,16 @@ def ivf_pq_refine_topk(
     on refine*k driver-merged rows. Integer-exact end to end, so a SQL
     oracle replays both stages bit-for-bit. Returns (id, adc_dist,
     exact_dist) ordered by (exact_dist, id)."""
-    C = np.array(centroids, dtype=np.int64)
-    B = [np.array(b, dtype=np.int64) for b in codebooks]
-    m = len(B)
-    sub = _uniform_subdim(B)
-    q = np.floor(np.asarray(list(query_vec), dtype=float) * scale + 0.5).astype(np.int64)
-    dc = ((C - q) ** 2).sum(axis=1)
-    probed = [int(c) for c in np.argsort(dc, kind="stable")[:nprobe]]
-    luts = {}
-    for c in probed:
-        r = q - C[c]
-        luts[c] = [
-            ((B[s] - r[s * sub:(s + 1) * sub]) ** 2).sum(axis=1).tolist()
-            for s in range(m)
-        ]
-    adc = None
-    for s in range(m):
-        lut_for_cell = None
-        for c in probed:
-            arr = F.array(*[F.lit(int(v)) for v in luts[c][s]])
-            lut_for_cell = (
-                F.when(F.col(cell_col) == c, arr)
-                if lut_for_cell is None
-                else lut_for_cell.when(F.col(cell_col) == c, arr)
-            )
-        term = F.element_at(lut_for_cell, F.col(codes_col)[s] + 1)
-        adc = term if adc is None else adc + term
-    cand = (
-        encoded.filter(F.col(cell_col).isin(probed) & F.col(codes_col).isNotNull())
-        .select(id_col, vec_col, adc.cast("bigint").alias("adc_dist"))
+    pool = (
+        _adc_scored(
+            encoded, [(None, query_vec)], None, centroids, codebooks, nprobe,
+            id_col, cell_col, codes_col, scale, vec_col=vec_col,
+        )
         .orderBy(F.col("adc_dist").asc_nulls_last(), F.col(id_col).asc())
         .limit(refine * k)
     )
-    qlit = F.array(*[F.lit(int(v)) for v in q])
-    xq = F.transform(
-        V.as_double(F.col(vec_col)),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
-    )
-    exact = F.aggregate(
-        F.zip_with(xq, qlit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     return (
-        cand.select(id_col, "adc_dist", exact.alias("exact_dist"))
+        pool.select(id_col, "adc_dist", _exact_dist(scale))
         .orderBy(F.col("exact_dist").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -985,86 +945,24 @@ def ivf_pq_refine_multi(
     candidate pool inside its probed cells, then ONLY the pool re-scored
     with the exact quantized-integer L2 against that query's vector.
 
-    Shape: the broadcast probe table carries each query's flat LUT AND
-    its quantized vector (kilobytes/query), the probed-cell union prunes
-    the store statically, the pool cut and the exact re-rank are TWO rank
-    windows over the SAME query-id partitioning (one shuffle — Catalyst
-    reuses the exchange), and the exact distance is zip_with/aggregate
-    int64 codegen on refine*k rows per query. Integer-exact end to end.
+    Shape: the broadcast probe table also carries each query's quantized
+    vector; the pool cut and the exact re-rank are TWO rank windows over
+    the SAME query-id partitioning (one shuffle — Catalyst reuses the
+    exchange), and the exact distance is zip_with/aggregate int64 codegen
+    on refine*k rows per query. Integer-exact end to end.
 
     Returns (query_id, id_col, rank, adc_dist, exact_dist); ties by id;
     ``prefilter`` as in ``ivf_pq_topk_multi``."""
-    C = np.array(centroids, dtype=np.int64)
-    B = [np.array(b, dtype=np.int64) for b in codebooks]
-    m = len(B)
-    sub = _uniform_subdim(B)
-    q_rows = collect_bounded(
-        queries.select(F.col(query_id).alias("_qid"), V.as_double(F.col(query_vec)).alias("_qv")),
-        max_queries,
-        f"ivf_pq_refine_multi collects the query side to the driver; got "
-        f">{max_queries} query rows (max_queries={max_queries}). Chunk "
-        f"the query set.",
+    scored = _adc_scored(
+        encoded,
+        _collect_queries(queries, query_id, query_vec, max_queries, "ivf_pq_refine_multi"),
+        queries.schema[query_id].dataType.simpleString(), centroids, codebooks, nprobe,
+        id_col, cell_col, codes_col, scale, prefilter, vec_col,
     )
-    seen = set()
-    for r in q_rows:
-        if r["_qid"] in seen:
-            raise ValueError(f"duplicate query id {r['_qid']!r} in the query set")
-        seen.add(r["_qid"])
-    probe_rows = []
-    for r in q_rows:
-        q = np.floor(np.asarray(r["_qv"], dtype=float) * scale + 0.5).astype(np.int64)
-        dc = ((C - q) ** 2).sum(axis=1)
-        for c in np.argsort(dc, kind="stable")[:nprobe]:
-            rq = q - C[int(c)]
-            lut = np.concatenate([
-                ((B[s] - rq[s * sub:(s + 1) * sub]) ** 2).sum(axis=1) for s in range(m)
-            ])
-            probe_rows.append(
-                (r["_qid"], int(c), [int(v) for v in lut], [int(v) for v in q])
-            )
-    probes = local_frame(
-        encoded.sparkSession, probe_rows,
-        f"_qid {queries.schema[query_id].dataType.simpleString()}, "
-        f"{cell_col} int, _lut array<bigint>, _qq array<bigint>",
-    )
-    offsets = [0]
-    for b in B:
-        offsets.append(offsets[-1] + b.shape[0])
-    adc = None
-    for s in range(m):
-        term = F.element_at(F.col("_lut"), F.lit(offsets[s]) + F.col(codes_col)[s] + 1)
-        adc = term if adc is None else adc + term
-    probed_cells = sorted({int(c) for _, c, _, _ in probe_rows})
-    scored = (
-        encoded.filter(
-            (F.col(cell_col).isin(probed_cells) if probed_cells else F.lit(False))
-            & F.col(codes_col).isNotNull()
-            & (prefilter if prefilter is not None else F.lit(True))
-        )
-        .join(F.broadcast(probes), cell_col)
-        .select("_qid", id_col, F.col(vec_col).alias("_v"), "_qq",
-                adc.cast("bigint").alias("adc_dist"))
-    )
-    w_adc = Window.partitionBy("_qid").orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-    pool = scored.withColumn("_r", F.row_number().over(w_adc)).filter(
-        F.col("_r") <= refine * k
-    )
-    xq = F.transform(
-        V.as_double(F.col("_v")),
-        lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("bigint"),
-    )
-    exact = F.aggregate(
-        F.zip_with(xq, F.col("_qq"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    w_ex = Window.partitionBy("_qid").orderBy(F.col("exact_dist").asc(), F.col(id_col).asc())
-    return (
-        pool.select("_qid", id_col, "adc_dist", exact.alias("exact_dist"))
-        .withColumn("rank", F.row_number().over(w_ex))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(query_id), id_col, "rank", "adc_dist", "exact_dist")
-    )
+    pool = _ranked(scored, refine * k, "adc_dist", id_col, "_r")
+    return _ranked(
+        pool.select("_qid", id_col, "adc_dist", _exact_dist(scale)), k, "exact_dist", id_col
+    ).select(F.col("_qid").alias(query_id), id_col, "rank", "adc_dist", "exact_dist")
 
 
 def ann_store_apply_changes(

@@ -719,3 +719,123 @@ def test_ivf_pq_multi_duplicate_qid_rejected(vec_df, spark):
     )
     with pytest.raises(ValueError, match="duplicate query id"):
         ivf_pq_topk_multi(qdf, enc, cents, books)
+
+
+def _jobs(spark, thunk):
+    """(result, number of Spark jobs ``thunk`` ran)."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"ivf-pq-jobs-{time.time_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pq_search_job_counts_and_single_vector_plans(vec_df, spark):
+    """Every PQ search runs one shared query path; its job counts on a warm,
+    cached, encoded corpus are pinned. A single-vector search looks its
+    LUT up in a literal map (one job), so its executed plan holds no
+    broadcast; a query frame broadcast-joins its probe table."""
+    from sycamore_spark.operators.similarity import (
+        ivf_pq_range_search, ivf_pq_refine_multi, ivf_pq_refine_topk,
+        ivf_pq_topk_multi, pq_encode, pq_topk, pq_train,
+    )
+
+    df, X = vec_df
+    cents, books = ivf_pq_train(df, ncells=6, m=4, subk=8, seed=5)
+    enc = ivf_pq_encode(df, cents, books).persist()
+    pbooks = pq_train(df, m=4, subk=8, seed=5)
+    penc = pq_encode(df, pbooks).persist()
+    enc.count()
+    penc.count()
+
+    def frame(ids):
+        return spark.createDataFrame(
+            [(int(i), X[i].tolist()) for i in ids], "query_id bigint, embedding array<float>"
+        )
+
+    q5, q1, q = frame((3, 50, 100, 150, 200)), frame((7,)), X[11]
+    single = {
+        "pq_topk": lambda: pq_topk(q, penc, pbooks, k=5),
+        "ivf_pq_topk": lambda: ivf_pq_topk(q, enc, cents, books, k=5, nprobe=2),
+        "ivf_pq_range_search": lambda: ivf_pq_range_search(q, enc, cents, books, 3000, nprobe=2),
+        "ivf_pq_refine_topk": lambda: ivf_pq_refine_topk(q, enc, cents, books, k=5, refine=3),
+    }
+    multi = {
+        "ivf_pq_topk_multi/5": lambda: ivf_pq_topk_multi(q5, enc, cents, books, k=5),
+        "ivf_pq_topk_multi/1": lambda: ivf_pq_topk_multi(q1, enc, cents, books, k=5),
+        "ivf_pq_refine_multi": lambda: ivf_pq_refine_multi(q5, enc, cents, books, k=5, refine=3),
+    }
+    try:
+        for want, ops in ((1, single), (4, multi)):
+            for name, op in ops.items():
+                op().collect()  # warm
+
+                def run():
+                    out = op()
+                    out.collect()
+                    return out
+
+                out, jobs = _jobs(spark, run)
+                assert jobs == want, name
+                executed = out._jdf.queryExecution().executedPlan().toString()
+                assert ("BroadcastExchange" in executed) == (want == 4), name
+    finally:
+        enc.unpersist()
+        penc.unpersist()
+
+
+def test_malformed_query_vectors_raise_naming_the_query(vec_df, spark):
+    """A NULL vector, a NULL element or a wrong-length vector raises
+    ValueError naming the query id in every batch entry point; the NULL
+    checks cover brute_force_topk, the length check the model's dimension,
+    and a single-vector search rejects a NULL vector the same way."""
+    from sycamore_spark.operators.similarity import (
+        ivf_pq_refine_multi, ivf_pq_refine_topk, ivf_pq_topk_multi, pq_topk,
+    )
+
+    df, X = vec_df
+    cents, books = ivf_pq_train(df, ncells=6, m=4, subk=8, seed=5)
+    enc = ivf_pq_encode(df, cents, books)
+    good = X[0].tolist()
+    bad = {
+        "is NULL": None,
+        "has a NULL element": [None] + good[1:],
+        "has 8 elements": good[:8],
+    }
+    for problem, vec in bad.items():
+        qdf = spark.createDataFrame(
+            [(1, good), (2, vec)], "query_id bigint, embedding array<float>"
+        )
+        for op in (ivf_pq_topk_multi, ivf_pq_refine_multi):
+            with pytest.raises(ValueError, match=f"query id 2 {problem}"):
+                op(qdf, enc, cents, books, k=3)
+        if problem != "has 8 elements":
+            with pytest.raises(ValueError, match=f"query id 2 {problem}"):
+                brute_force_topk(qdf.withColumnRenamed("query_id", "vec_id"), df, k=3)
+        with pytest.raises(ValueError, match=problem):
+            ivf_pq_refine_topk(vec, enc, cents, books, k=3)
+    with pytest.raises(ValueError, match="is NULL"):
+        ivf_pq_topk(None, enc, cents, books)
+    with pytest.raises(ValueError, match="has 8 elements"):
+        pq_topk(good[:8], enc, books)
+
+
+def test_ivf_pq_query_path_is_spelled_once():
+    """One IVF-PQ query path: ``similarity.py`` routes queries to cells in
+    exactly one place, and neither the old per-entry-point probe helper
+    nor a per-subspace CASE chain of cell LUTs comes back."""
+    import pathlib
+    import re
+
+    src = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "sycamore_spark" / "operators" / "similarity.py"
+    ).read_text()
+    assert len(re.findall(r"np\.argsort\([^\n]*kind=\"stable\"", src)) == 1
+    assert "_adc_probe" not in src
+    assert not re.search(r"F\.when\(\s*F\.col\(cell_col\)\s*==", src)
