@@ -20,6 +20,7 @@ that are about to each cost milliseconds of Python anyway.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -62,20 +63,6 @@ def lineage_cut(df: DataFrame, checkpoint_dir: str | None = None, eager: bool = 
     return df.localCheckpoint(eager=eager)
 
 
-def duplicate_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """Up to five ``id_col`` values that occur more than once in ``df``:
-    the one-row-per-id check of a CDC delta (empty when it holds)."""
-    from pyspark.sql import functions as F
-
-    return (
-        df.groupBy(F.col(id_col))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .limit(5)
-        .select(id_col)
-    )
-
-
 def fold_touched_buckets(
     store_dir: str,
     store: DataFrame | None,
@@ -102,19 +89,42 @@ def fold_touched_buckets(
       included;
     - ``bucket_of_id``: a bucket expression over ``id_col`` when buckets
       are a hash of the id, so the touched buckets follow from the delta
-      alone; None finds the old buckets of the delta ids with a semi-join
-      scan of the store and adds the buckets of the new rows;
+      alone; None finds the old buckets of the delta ids with a scan of
+      the store filtered by those ids and adds the buckets of the new rows;
     - ``rebuild(merged)``: an optional per-bucket recompute of the merged
-      rows (whatever it derives must stay inside a bucket).
+      rows (whatever it derives must stay inside a bucket). It runs on
+      rows already hash-partitioned by ``bucket_col``, so a window
+      partitioned by the bucket plus its own keys adds no shuffle.
 
-    Jobs: one probe collect (touched buckets; the duplicate-id check rides
-    it unless ``prepared``), one survivors collect that also materializes
-    the lazy cut of the merged rows, and the dynamic-partition overwrite.
-    The cut is required: the write replaces files the merged plan reads.
-    ``prepared=True`` asserts the caller already cut and dup-checked the
-    delta; an unchecked duplicate id would silently duplicate rows.
-    Dynamic overwrite cannot write an empty partition, so the directory of
-    a bucket whose last row was deleted is removed explicitly."""
+    Jobs: one probe collect over the delta (its ids, and either their
+    buckets or the new rows' buckets), one collect of the old buckets of
+    the delta ids (not with ``bucket_of_id``), then the overwrite: one
+    shuffle by bucket, shared by ``rebuild`` and the write, and the write
+    itself. The shuffle has at most one partition per slot
+    (``defaultParallelism``); a bucket lands in one partition, so each
+    touched bucket is still written as one file. The ids go back into the
+    plan as a literal id list, so neither the old-bucket scan nor the
+    removal of the delta ids from the kept rows broadcasts anything (a
+    broadcast, even of a LocalRelation, is a job of its own), and the
+    duplicate-id check runs on the driver over the probed ids.
+    ``new_rows`` is cut once, lazily: the probe computes it (the ANN
+    encode is a Python stage) and the merge reads the cut; a shuffle
+    inside it runs when it is cut. The merged rows are cut too, because
+    the write replaces files the merged plan reads; the write's first
+    stage computes that cut. ``prepared=True`` asserts the caller already
+    cut the delta, and only skips the entry cut.
+
+    The delta runs as one partition: it is batch-sized by contract, and
+    the probe brings all of its ids to the driver anyway. Each delta stage
+    is then one task, and a per-id aggregate in ``new_rows`` (the index's
+    term counts) needs no shuffle. A delta the caller has not cut computes
+    its own lineage in that one task too.
+
+    Dynamic overwrite cannot write an empty partition. A touched bucket
+    whose file listing is the same after the overwrite as before received
+    no rows: its last row was deleted, so its directory is removed. If
+    that removal does not happen, the bucket keeps the rows of deleted
+    ids; re-running the fold touches it again and removes it."""
     from pyspark.sql import functions as F
 
     from sycamore_spark.materialize import _hadoop_fs
@@ -122,59 +132,74 @@ def fold_touched_buckets(
     if not prepared:
         # lazy: the probe below is the first action on the delta
         changes = lineage_cut(changes, eager=False)
-    new = new_rows(changes.filter(F.col(op_col) != delete_op).drop(op_col))
-    delta_ids = changes.select(F.col(id_col)).distinct()
-    if bucket_of_id is not None:
-        buckets = changes.select(bucket_of_id.alias(bucket_col)).distinct()
-    else:
-        new_buckets = new.select(bucket_col).distinct()
-        old_buckets = (
-            new_buckets.limit(0) if store is None else
-            store.join(F.broadcast(delta_ids), id_col, "left_semi")
-            .select(bucket_col).distinct()
-        )
-        buckets = old_buckets.unionByName(new_buckets).distinct()
-    probe = buckets.select(
-        F.lit("b").alias("_k"), F.col(bucket_col).cast("string").alias("_v")
+    changes = changes.coalesce(1)
+    new = lineage_cut(
+        new_rows(changes.filter(F.col(op_col) != delete_op).drop(op_col)), eager=False
     )
-    if not prepared:
-        probe = duplicate_ids(changes, id_col).select(
-            F.lit("d").alias("_k"), F.col(id_col).cast("string").alias("_v")
-        ).unionByName(probe)
+    probe = changes.select(
+        F.lit(True).alias("_delta"),
+        F.col(id_col),
+        (F.lit(None) if bucket_of_id is None else bucket_of_id).alias(bucket_col),
+    )
+    if bucket_of_id is None:
+        probe = probe.unionByName(
+            new.select(F.lit(False).alias("_delta"), F.lit(None).alias(id_col), bucket_col)
+        )
     rows = probe.collect()
-    dup = [r[1] for r in rows if r[0] == "d"]
+    counts = Counter(r[1] for r in rows if r[0])
+    dup = [i for i, n in counts.items() if n > 1][:5]
     if dup:
         raise ValueError(
             f"delta carries duplicate {id_col} values {dup}: collapse each id "
             f"to one final row (deterministic winner, e.g. max seq) before applying"
         )
-    touched = sorted(int(r[1]) for r in rows if r[0] == "b")
+    # the delta rows carry their buckets with bucket_of_id, else the new rows do
+    touched = {r[2] for r in rows if r[0] == (bucket_of_id is not None)}
+    # a NULL id matches no store row, as in a join
+    delta_id = _isin(id_col, [i for i in counts if i is not None])
+    if bucket_of_id is None and store is not None and counts:
+        touched.update(r[0] for r in store.filter(delta_id).select(bucket_col).collect())
     if not touched:
         return 0
+    touched = sorted(touched)
     keep = (
         new.limit(0) if store is None else
-        store.filter(F.col(bucket_col).isin(touched))
-        .join(F.broadcast(delta_ids), id_col, "left_anti")
+        store.filter(_isin(bucket_col, touched) & ~F.coalesce(delta_id, F.lit(False)))
         .select(*new.columns)
     )
-    merged = keep.unionByName(new)
+    spark = changes.sparkSession
+    merged = lineage_cut(keep.unionByName(new), eager=False).repartition(
+        min(len(touched), spark.sparkContext.defaultParallelism), F.col(bucket_col)
+    )
     if rebuild is not None:
         merged = rebuild(merged)
-    # lazy: the survivors collect computes every partition of the cut
-    merged = lineage_cut(merged, eager=False)
-    survivors = {r[0] for r in merged.select(bucket_col).distinct().collect()}
+    dirs = [_hadoop_fs(spark, f"{store_dir.rstrip('/')}/{bucket_col}={b}") for b in touched]
+    before = [_files(fs, p) for fs, p in dirs]
     (
-        merged.repartition(len(touched), F.col(bucket_col))
-        .write.mode("overwrite")
+        merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(bucket_col)
         .parquet(store_dir)
     )
-    for b in touched:
-        if b not in survivors:
-            fs, p = _hadoop_fs(changes.sparkSession, f"{store_dir.rstrip('/')}/{bucket_col}={b}")
+    for (fs, p), names in zip(dirs, before):
+        if _files(fs, p) == names:
             fs.delete(p, True)
     return len(touched)
+
+
+def _isin(col: str, values: list) -> Column:
+    """``col IN (values)``. Integers go in as one SQL string, one call into
+    the JVM, where ``Column.isin`` makes a round trip per value."""
+    from pyspark.sql import functions as F
+
+    if values and all(type(v) is int for v in values):
+        return F.expr(f"`{col.replace('`', '``')}` IN ({', '.join(map(str, values))})")
+    return F.col(col).isin(values)
+
+
+def _files(fs, path) -> set:
+    """The entry names in the directory ``path`` (empty when absent)."""
+    return {s.getPath().getName() for s in fs.listStatus(path)} if fs.exists(path) else set()
 
 
 def overlap_jobs(*thunks, max_workers: int | None = None) -> list:

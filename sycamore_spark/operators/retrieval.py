@@ -116,8 +116,10 @@ def _rank_postings(tf: DataFrame, id_col: str, *extra: str) -> DataFrame:
     """(term, id_col, tf) rows -> postings (term, df, rank, id_col, tf,
     *extra): the term's document frequency and the doc's impact rank in the
     term's postings (tf desc, id asc), both riding one window exchange on
-    the term."""
-    by_term = Window.partitionBy("term")
+    the term. Each ``extra`` column is a function of the term (the bucket)
+    and partitions the window too: that splits no term, and rows already
+    hash-partitioned by the bucket need no new exchange."""
+    by_term = Window.partitionBy("term", *extra)
     impact = by_term.orderBy(F.col("tf").desc(), F.col(id_col).asc())
     return tf.select(
         "term",
@@ -600,29 +602,28 @@ def index_apply_changes(
     (same CDC contract: each id at most once per delta, delta is
     batch-sized): tokenize the changed docs (delta-sized explode), find
     the touched buckets (buckets of every NEW term plus buckets holding
-    any OLD posting of a delta id — one column-pruned semi-join scan),
-    then rebuild ONLY those buckets: (old postings minus delta ids) ∪
-    new postings, with df and impact rank recomputed per term — complete
-    and correct within the bucket because a term's postings never span
-    buckets. Dynamic partition overwrite; emptied bucket dirs removed
-    (the shared steps of ``functions.partitioning.fold_touched_buckets``).
-    Returns the touched-bucket count.
+    any OLD posting of a delta id — one column-pruned scan filtered by
+    the delta ids), then rebuild ONLY those buckets: (old postings minus
+    delta ids) ∪ new postings, with df and impact rank recomputed per
+    term — complete and correct within the bucket because a term's
+    postings never span buckets. Dynamic partition overwrite; emptied
+    bucket dirs removed (the shared steps of
+    ``functions.partitioning.fold_touched_buckets``). Returns the
+    touched-bucket count.
 
     Scale contract: work ∝ touched buckets (a bucket holds ~vocab/N
-    terms' postings), never the index; df/rank recompute rides one
-    window exchange over touched-bucket rows only. n_buckets must match
-    the build — it is the store's physical contract, like the ANN
-    store's cell count.
+    terms' postings), never the index; the df/rank window runs on the
+    write's own shuffle by bucket, over touched-bucket rows only.
+    n_buckets must match the build — it is the store's physical
+    contract, like the ANN store's cell count.
 
-    ``prepared=True`` asserts the caller ALREADY cut the delta's lineage
-    and validated the one-row-per-id contract (e.g. a caller folding the
-    same checkpointed delta into several stores, or the streaming fold
-    which validates once per micro-batch): the entry cut and the dup
-    check are skipped. Results are identical WHEN the contract holds; a
-    prepared delta that was NOT cut re-runs its (possibly
-    non-deterministic) lineage on every reference, and one carrying
-    duplicate ids silently rebuilds buckets with duplicate postings rows
-    that skew df/rank instead of raising."""
+    A delta carrying an id twice raises ``ValueError`` before any file
+    changes. ``prepared=True`` asserts the caller ALREADY cut the delta's
+    lineage (e.g. a caller folding the same checkpointed delta into
+    several stores, or the streaming fold, which cuts each micro-batch
+    once) and skips only the entry cut; a prepared delta that was NOT cut
+    re-runs its (possibly non-deterministic) lineage on every
+    reference."""
     return fold_touched_buckets(
         index_dir,
         store.read_store(spark, index_dir),
@@ -710,17 +711,18 @@ def norms_apply_changes(
     ids) ∪ new norms, dynamic partition overwrite, emptied dirs removed.
     Same delta contract as ``index_apply_changes`` (each id once,
     batch-sized); run both folds on the same delta to keep the store
-    pair consistent. ``prepared=True`` as in ``index_apply_changes``:
-    the caller already checkpointed + dup-validated the delta, so the
-    redundant per-store jobs are skipped — identical results ONLY under
-    that contract (an unchecked duplicate id would silently write
-    duplicate norms rows that skew n_docs/avgdl instead of raising)."""
+    pair consistent. The one-row-per-id check makes each delta row one
+    norms row: a per-row projection, no explode and no groupBy.
+    ``prepared=True`` as in ``index_apply_changes``: it skips only the
+    entry cut, and a duplicate id raises either way."""
     return fold_touched_buckets(
         norms_dir,
         store.read_store(spark, norms_dir),
         changes,
-        lambda ups: doc_norms(
-            ups, id_col=id_col, text_col=text_col, bucket_col=bucket_col, n_buckets=n_buckets
+        lambda ups: _doc_lengths(ups, id_col, text_col).filter(F.col("_dl") > 0).select(
+            F.col("_id").alias(id_col),
+            F.col("_dl").cast("long").alias("dl"),
+            _bucket(F.col("_id"), n_buckets).alias(bucket_col),
         ),
         id_col, bucket_col, op_col, delete_op,
         bucket_of_id=_bucket(F.col(id_col), n_buckets),

@@ -986,41 +986,41 @@ def ann_store_apply_changes(
     the store's model (an updated vector may land in a DIFFERENT cell —
     the row moves directories), delete ops drop the id. Only the touched
     cells are rebuilt: the old cells holding any delta id (one
-    column-pruned semi-join scan of the store) plus the new cells of the
-    encoded upserts; their rows are rewritten as (old minus delta ids)
-    union (encoded upserts) via dynamic partition overwrite, and a cell
-    whose last row was deleted has its directory removed explicitly
-    (dynamic overwrite cannot write an empty partition — without this the
-    stale files would survive). Returns the touched-cell count. The
+    column-pruned scan of the store, filtered by the delta ids) plus the
+    new cells of the encoded upserts; their rows are rewritten as (old
+    minus delta ids) union (encoded upserts) via dynamic partition
+    overwrite, and a cell whose last row was deleted has its directory
+    removed explicitly (dynamic overwrite cannot write an empty partition
+    — without this the stale files would survive). Returns the touched-cell count. The
     steps are ``functions.partitioning.fold_touched_buckets``; unlike the
     postings and norms folds, a missing store is an error here.
 
-    Scale contract: the delta id set is broadcast (batch-sized, the CDC
-    contract — streaming/cdc.py maintain_snapshot_stream is the same
-    shape over generic buckets); work and rewrite volume are ∝ touched
-    cells, never the store. Store rows outside ``(id, codes, cell)`` plus
-    whatever extra columns the delta carries must agree by name for the
-    union. The merged rows are lineage-cut before the overwrite (the
-    write replaces the very files the plan reads).
+    Scale contract: the delta ids are collected to the driver
+    (batch-sized, the CDC contract — streaming/cdc.py
+    maintain_snapshot_stream is the same shape over generic buckets) and
+    go back into the plan as a literal id list; work and rewrite volume
+    are ∝ touched cells, never the store. Store rows outside
+    ``(id, codes, cell)`` plus whatever extra columns the delta carries
+    must agree by name for the union. The merged rows are lineage-cut
+    before the overwrite (the write replaces the very files the plan
+    reads).
 
     A delta must carry each id at most ONCE: the same id twice (e.g. two
-    U rows) would anti-join the old row once but union BOTH encoded rows,
+    U rows) would drop the old row once but add BOTH encoded rows,
     silently leaving duplicate vectors in the store — rejected loudly
-    (one batch-sized agg; callers with multi-event feeds collapse to a
-    last-writer row first, as streaming/cdc.py does via seq_col).
+    before any file changes, by a driver-side count over the collected
+    ids (callers with multi-event feeds collapse to a last-writer row
+    first, as streaming/cdc.py does via seq_col).
 
-    The delta is lineage-cut on entry (lazily — the touched-cell
-    probe is the first action and materializes it): this function
-    references its lineage ~6 times (dup validation, the broadcast id set
-    on both joins, encode, cell union), and a delta whose upstream is an
-    expensive re-embed (the embed-CDC path) would otherwise re-run that
-    work per reference. Batch-sized by contract, so materializing it is
-    cheap. ``prepared=True`` asserts the caller already cut
-    and dup-validated the delta (multi-store fold callers), skipping the
-    redundant entry work — identical results ONLY under that contract: an
-    unchecked duplicate id silently leaves duplicate vectors in the store
-    instead of raising, and an un-checkpointed non-deterministic delta can
-    diverge between the references above."""
+    The delta is lineage-cut on entry (lazily — the delta probe is the
+    first action and materializes it), and so are the encoded upserts:
+    the probe runs the encode, a Python stage, once and the merge reads
+    its cut, so a delta whose upstream is an expensive re-embed (the
+    embed-CDC path) is computed once. ``prepared=True`` asserts the
+    caller already cut the delta (multi-store fold callers) and skips
+    only the entry cut; the duplicate-id check runs either way, and an
+    un-checkpointed non-deterministic delta can diverge between the
+    probe and the merge."""
     from sycamore_spark.functions.partitioning import fold_touched_buckets
 
     store = spark.read.parquet(store_dir)  # a missing store is an error

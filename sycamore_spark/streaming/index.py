@@ -51,29 +51,19 @@ def maintain_index_stream(
     inside the same guarded batch, and the fold pair is content-
     idempotent, so the crash window between them converges on replay.
     Returns the started StreamingQuery."""
-    from sycamore_spark.functions.partitioning import duplicate_ids, lineage_cut, overlap_jobs
+    from sycamore_spark.functions.partitioning import lineage_cut, overlap_jobs
     from sycamore_spark.operators.retrieval import (
         index_apply_changes, norms_apply_changes,
     )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Checkpoint + dup-validate the micro-batch ONCE here (both folds
-        # reference the delta several times; before, each fold re-ran the
-        # checkpoint and the dup check on the same rows), then fold the two
-        # independent stores CONCURRENTLY (guide §2.6) — they touch
-        # disjoint directories and each job's tasks back-fill the other's
-        # stage tails. The checkpoint is LAZY: the dup-check collect below
-        # is the first action and materializes it (one job per batch, not
-        # two — r14).
+        # Cut the micro-batch ONCE here and fold the two independent stores
+        # CONCURRENTLY (guide §2.6): they touch disjoint directories and each
+        # job's tasks back-fill the other's stage tails. The cut is lazy:
+        # the first fold's probe materializes it, and each fold checks the
+        # one-row-per-id contract on the ids its probe collects.
         batch_df = lineage_cut(batch_df, eager=False)
-        dup = duplicate_ids(batch_df, id_col).collect()
-        if dup:
-            raise ValueError(
-                f"micro-batch carries duplicate {id_col} values "
-                f"{[r[0] for r in dup]}: collapse each id to one final row "
-                f"before applying (the CDC-extract contract)"
-            )
         folds = [
             lambda: index_apply_changes(
                 spark, index_dir, batch_df, id_col=id_col, text_col=text_col,

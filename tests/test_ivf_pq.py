@@ -5,6 +5,7 @@ probed-cell restriction, null handling, and recall@k against brute force."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from conftest import count_jobs
 
 from sycamore_spark.operators.similarity import (
     brute_force_topk,
@@ -721,20 +722,6 @@ def test_ivf_pq_multi_duplicate_qid_rejected(vec_df, spark):
         ivf_pq_topk_multi(qdf, enc, cents, books)
 
 
-def _jobs(spark, thunk):
-    """(result, number of Spark jobs ``thunk`` ran)."""
-    import time
-
-    sc = spark.sparkContext
-    group = f"ivf-pq-jobs-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = thunk()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_pq_search_job_counts_and_single_vector_plans(vec_df, spark):
     """Every PQ search runs one shared query path; its job counts on a warm,
     cached, encoded corpus are pinned. A single-vector search looks its
@@ -780,7 +767,7 @@ def test_pq_search_job_counts_and_single_vector_plans(vec_df, spark):
                     out.collect()
                     return out
 
-                out, jobs = _jobs(spark, run)
+                out, jobs = count_jobs(spark, run)
                 assert jobs == want, name
                 executed = out._jdf.queryExecution().executedPlan().toString()
                 assert ("BroadcastExchange" in executed) == (want == 4), name

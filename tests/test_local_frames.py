@@ -11,12 +11,12 @@ retrieval folds and scorers.
 
 import glob
 import os
-import time
 
 import numpy as np
 import pytest
 from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import functions as F
+from conftest import count_jobs
 
 from sycamore_spark import compat
 from sycamore_spark.functions.local import collect_bounded, local_frame
@@ -50,18 +50,6 @@ SCHEMAS = [
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def _jobs(spark, thunk):
-    """(result, number of Spark jobs ``thunk`` ran)."""
-    sc = spark.sparkContext
-    group = f"local-frames-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = thunk()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _same(a, b):
@@ -105,8 +93,8 @@ def test_collect_bounded_one_job_in_frame_order(spark):
     rdd = spark.sparkContext.parallelize([(i, str(i)) for i in range(3)], 8)
     df = spark.createDataFrame(rdd, "a bigint, b string")
     want = df.collect()
-    _, limit_jobs = _jobs(spark, lambda: df.limit(11).collect())
-    rows, jobs = _jobs(spark, lambda: collect_bounded(df, 10, "too many"))
+    _, limit_jobs = count_jobs(spark, lambda: df.limit(11).collect())
+    rows, jobs = count_jobs(spark, lambda: collect_bounded(df, 10, "too many"))
     assert rows == want and jobs == 1 and limit_jobs > 1
     with pytest.raises(ValueError, match="too many"):
         collect_bounded(df, 2, "too many")
@@ -168,7 +156,7 @@ def test_vector_serving_plans_have_no_python_rdd(spark):
         ("brute_force_topk", lambda: brute_force_topk(
             qdf.withColumnRenamed("query_id", "vec_id"), corpus, k=3)),
     ]:
-        out, jobs = _jobs(spark, op)
+        out, jobs = count_jobs(spark, op)
         assert jobs == 1, name  # the bounded query collect
         assert "LogicalRDD" not in _plan(out), name
         assert out.count() == 9, name

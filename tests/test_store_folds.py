@@ -4,16 +4,20 @@
   norms store agree bit-for-bit even on text with edge whitespace, empty
   text and NULL text.
 - The touched-bucket folds and a store read run a pinned number of
-  Spark jobs, so a refactor cannot add a job unnoticed.
+  Spark jobs, so a refactor cannot add a job unnoticed; the ANN fold
+  encodes its upserts once.
+- A fold rejects a duplicate id, prepared delta or not, before any file
+  changes; a failed emptied-bucket delete converges when the fold is
+  re-run.
 - Mark and marker files are replaced atomically: a leftover
   temp file from a crashed write changes nothing, and an overwrite
   leaves complete content and no temp file."""
 
 import os
-import time
 
 import numpy as np
 import pytest
+from conftest import count_jobs
 
 from sycamore_spark.materialize import _fs_write_text, _hadoop_fs
 from sycamore_spark.operators.retrieval import (
@@ -45,18 +49,6 @@ EDGE_ROWS = [
     (6, "alpha\n"),
 ]
 QUERIES = [(1, "alpha beta"), (2, "\tbeta delta")]
-
-
-def _jobs(spark, thunk):
-    """(result, number of Spark jobs ``thunk`` ran)."""
-    sc = spark.sparkContext
-    group = f"store-folds-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = thunk()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _lexical_store(spark, root, docs):
@@ -108,17 +100,48 @@ def _vector_model():
     return X, cents, books
 
 
-@pytest.mark.parametrize("prepared,jobs", [
-    (False, {"index": 15, "norms": 11, "ann": 13}),
-    (True, {"index": 14, "norms": 10, "ann": 12}),
-])
-def test_fold_job_counts(spark, tmp_path, prepared, jobs):
+def _stores(spark, tmp_path):
+    """The lexical store pair of EDGE_ROWS and an ANN store of 40 vectors."""
     docs = spark.createDataFrame(EDGE_ROWS, "doc_id bigint, text string")
     idx, nrm = _lexical_store(spark, str(tmp_path), docs)
     X, cents, books = _vector_model()
     vecs = spark.createDataFrame([(i, X[i].tolist()) for i in range(40)], "vec_id bigint, embedding array<double>")
     ann = str(tmp_path / "ann")
     ivf_pq_encode(vecs, cents, books).drop("embedding").write.partitionBy("cell_id").parquet(ann)
+    return idx, nrm, ann, X, cents, books
+
+
+def _counted_encode(spark, monkeypatch):
+    """Make the ANN fold's encode add its Python stage's rows to the
+    returned accumulator: a stage that runs twice counts its rows twice."""
+    from sycamore_spark.operators import similarity
+
+    rows = spark.sparkContext.accumulator(0)
+    encode = similarity.ivf_pq_encode
+
+    def counted(df, *args, **kwargs):
+        out = encode(df, *args, **kwargs)
+
+        def run(it):
+            for pdf in it:
+                rows.add(len(pdf))
+                yield pdf
+
+        return out.mapInPandas(run, schema=out.schema)
+
+    monkeypatch.setattr(similarity, "ivf_pq_encode", counted)
+    return rows
+
+
+@pytest.mark.parametrize("prepared,jobs", [
+    (False, {"index": 5, "norms": 4, "ann": 5}),
+    (True, {"index": 5, "norms": 4, "ann": 5}),
+])
+def test_fold_job_counts(spark, tmp_path, monkeypatch, prepared, jobs):
+    """Per fold: the store's schema inference, the delta probe, the
+    old-bucket collect (not for norms), the shuffle by bucket and the
+    write. The ANN upserts go through the encode's Python stage once."""
+    idx, nrm, ann, X, cents, books = _stores(spark, tmp_path)
     delta = spark.createDataFrame(
         [(1, None, "D"), (4, "delta epsilon", "U"), (9, "zeta zeta", "I")], "doc_id bigint, text string, op string"
     )
@@ -128,20 +151,115 @@ def test_fold_job_counts(spark, tmp_path, prepared, jobs):
     )
     if prepared:
         delta, vdelta = delta.localCheckpoint(eager=True), vdelta.localCheckpoint(eager=True)
+    encoded = _counted_encode(spark, monkeypatch)
     got = {
-        "index": _jobs(spark, lambda: index_apply_changes(spark, idx, delta, n_buckets=NB, prepared=prepared))[1],
-        "norms": _jobs(spark, lambda: norms_apply_changes(spark, nrm, delta, n_buckets=NB, prepared=prepared))[1],
-        "ann": _jobs(spark, lambda: ann_store_apply_changes(spark, ann, vdelta, cents, books, prepared=prepared))[1],
+        "index": count_jobs(spark, lambda: index_apply_changes(spark, idx, delta, n_buckets=NB, prepared=prepared))[1],
+        "norms": count_jobs(spark, lambda: norms_apply_changes(spark, nrm, delta, n_buckets=NB, prepared=prepared))[1],
+        "ann": count_jobs(spark, lambda: ann_store_apply_changes(spark, ann, vdelta, cents, books, prepared=prepared))[1],
     }
     assert got == jobs
+    assert encoded.value == 2
     assert sorted((r.doc_id, r.dl) for r in spark.read.parquet(nrm).collect()) == [(2, 2), (4, 2), (6, 1), (9, 2)]
+
+
+def _files(root):
+    """Every file under ``root`` with its size and mtime."""
+    return sorted(
+        (os.path.relpath(os.path.join(d, n), root), os.stat(os.path.join(d, n)).st_size,
+         os.stat(os.path.join(d, n)).st_mtime_ns)
+        for d, _, names in os.walk(root) for n in names
+    )
+
+
+def test_prepared_delta_with_a_duplicate_id_raises(spark, tmp_path):
+    """``prepared=True`` skips only the entry cut: a duplicate id still
+    raises, before any store file changes."""
+    idx, nrm, ann, X, cents, books = _stores(spark, tmp_path)
+    delta = spark.createDataFrame(
+        [(4, "delta", "U"), (9, "zeta", "I"), (4, "epsilon", "U")], "doc_id bigint, text string, op string"
+    ).localCheckpoint(eager=True)
+    vdelta = spark.createDataFrame(
+        [(4, X[5].tolist(), "U"), (4, X[6].tolist(), "U")], "vec_id bigint, embedding array<double>, op string"
+    ).localCheckpoint(eager=True)
+    before = [_files(d) for d in (idx, nrm, ann)]
+    for fold, name in [
+        (lambda: index_apply_changes(spark, idx, delta, n_buckets=NB, prepared=True), "doc_id"),
+        (lambda: norms_apply_changes(spark, nrm, delta, n_buckets=NB, prepared=True), "doc_id"),
+        (lambda: ann_store_apply_changes(spark, ann, vdelta, cents, books, prepared=True), "vec_id"),
+    ]:
+        with pytest.raises(ValueError, match=f"duplicate {name} values \\[4\\]"):
+            fold()
+    assert [_files(d) for d in (idx, nrm, ann)] == before
+
+
+class _FailFirstDelete:
+    """A Hadoop FileSystem whose first ``delete`` raises."""
+
+    def __init__(self, fs, failed):
+        self._fs, self._failed = fs, failed
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def delete(self, path, recursive):
+        if not self._failed:
+            self._failed.append(str(path))
+            raise OSError("injected delete failure")
+        return self._fs.delete(path, recursive)
+
+
+def _buckets(d, col):
+    return sorted(n for n in os.listdir(d) if n.startswith(f"{col}="))
+
+
+def _rows(spark, d):
+    return sorted(tuple(r) for r in spark.read.parquet(d).collect())
+
+
+def test_emptied_bucket_delete_failure_converges_on_rerun(spark, tmp_path, monkeypatch):
+    """The emptied-bucket delete fails once, after the overwrite committed:
+    the bucket keeps the rows of the deleted ids. Re-running the same fold
+    touches it again and removes it, and each store then equals a
+    from-scratch build of the surviving docs."""
+    import sycamore_spark.materialize as materialize
+
+    docs = spark.createDataFrame(EDGE_ROWS, "doc_id bigint, text string")
+    idx, nrm = _lexical_store(spark, str(tmp_path), docs)
+    delta = spark.createDataFrame(
+        [(1, None, "D"), (2, None, "D"), (4, None, "D"), (9, "zeta", "I")], "doc_id bigint, text string, op string"
+    )
+    live = spark.createDataFrame(
+        [r for r in EDGE_ROWS if r[0] not in (1, 2, 4)] + [(9, "zeta")], "doc_id bigint, text string"
+    )
+    fresh_idx, fresh_nrm = _lexical_store(spark, str(tmp_path / "fresh"), live)
+    real = materialize._hadoop_fs
+    for store_dir, fresh, col, fold in [
+        (idx, fresh_idx, "bkt", lambda: index_apply_changes(spark, idx, delta, n_buckets=NB)),
+        (nrm, fresh_nrm, "nbkt", lambda: norms_apply_changes(spark, nrm, delta, n_buckets=NB)),
+    ]:
+        emptied = set(_buckets(store_dir, col)) - set(_buckets(fresh, col))
+        assert emptied, col  # the delta empties a bucket
+        failed = []
+
+        def failing(s, path, failed=failed):
+            fs, hpath = real(s, path)
+            return _FailFirstDelete(fs, failed), hpath
+
+        monkeypatch.setattr(materialize, "_hadoop_fs", failing)
+        with pytest.raises(OSError, match="injected"):
+            fold()
+        monkeypatch.setattr(materialize, "_hadoop_fs", real)
+        assert failed and set(_buckets(store_dir, col)) > set(_buckets(fresh, col))
+        fold()
+        assert _buckets(store_dir, col) == _buckets(fresh, col)
+        assert _rows(spark, store_dir) == _rows(spark, fresh)
 
 
 def test_store_read_job_count(spark, tmp_path):
     docs = spark.createDataFrame(EDGE_ROWS, "doc_id bigint, text string")
     qdf = spark.createDataFrame(QUERIES, "query_id bigint, query string")
     idx, nrm = _lexical_store(spark, str(tmp_path), docs)
-    rows, jobs = _jobs(spark, lambda: bm25_from_index(spark, idx, nrm, qdf, n_buckets=NB, k=3).collect())
+    rows, jobs = count_jobs(spark, lambda: bm25_from_index(spark, idx, nrm, qdf, n_buckets=NB, k=3).collect())
     assert jobs == 10 and len(rows) == 5
 
 
