@@ -4,7 +4,7 @@ Reference parity: ``SketchUniquify`` near-dup removal via shingles/simhash
 (reference: lib/sycamore/sycamore/transforms/sketcher.py:29-110,
 functions/simhash.py:84-204) — re-expressed as distributed Spark plans.
 
-Every operator here follows the same scale shape:
+Every pair operator here follows the same scale shape:
   1. per-row signature computation — pure native expressions, no shuffle;
   2. candidate generation — ONE equi-join shuffle on a blocking key
      (band hash / bit chunk / inverted-index token), never an O(n²)
@@ -14,6 +14,17 @@ Every operator here follows the same scale shape:
 That shape is what survives 100 TB: the only quadratic step runs within
 blocks, and skewed blocking keys (stop-shingles) are dropped by frequency
 capping before the join.
+
+The shape is spelled once, in the pair core every pair operator (and
+``sketcher.rolling_sketch_pairs``) calls: ``_item_set``/``_hashed_set``
+(the distinct tokens or word n-grams of a text, and their sorted
+xxhash64 form; NULL text has no items), ``_prefix_candidates`` (the
+rarest-first prefix filter), ``_band_keys`` (MinHash banding),
+``_blocked_pairs`` (the candidate equi-join), ``_candidate_sets`` (item
+sets built only for candidate docs), ``_verified`` (the verify join,
+keep predicate and 6-place rounding) and ``_larger_ids`` (what a
+keep-lowest-id dedup drops). Each operator keeps only its signature and
+its metric.
 """
 
 from __future__ import annotations
@@ -22,7 +33,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sycamore_spark.functions import text as T
@@ -50,6 +61,154 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Pair core: item sets, prefix filter, band keys, blocked join, verify join
+# ---------------------------------------------------------------------------
+
+def _item_set(text: Column, ngram: int = 1) -> Column:
+    """The distinct tokens (``ngram`` 1) or word n-grams of ``text``.
+
+    NULL text has no items: the set is NULL, never ``[NULL]`` (which is
+    what ``word_shingles`` makes of a NULL text). A NULL set explodes to
+    no postings, and ``_candidate_sets`` drops it, so a NULL-text doc is
+    never verified — with ANSI off ``size(NULL)`` is -1, and two NULL
+    sets would otherwise score -1/-1 = 1.0."""
+    items = T.tokens(text) if ngram == 1 else T.word_shingles(text, k=ngram)
+    return F.when(text.isNotNull(), F.array_distinct(items))
+
+
+def _hashed_set(text: Column, ngram: int = 1) -> Column:
+    """``_item_set`` as a sorted xxhash64 array: the joins only test
+    equality, and 8-byte keys shrink every shuffle vs raw strings
+    (collision odds across a corpus vocabulary are ~|V|^2/2^65)."""
+    return F.array_sort(F.transform(_item_set(text, ngram), lambda t: F.xxhash64(t)))
+
+
+def _band_keys(sig: Column, bands: int, rows: int) -> Column:
+    """MinHash banding: one (band, bucket) struct per band, the bucket
+    hashing that band's ``rows`` signature values. Docs sharing any
+    (band, bucket) are LSH candidates."""
+    return F.array(*[
+        F.struct(
+            F.lit(bi).alias("band"),
+            F.xxhash64(*[sig[bi * rows + r] for r in range(rows)]).alias("bucket"),
+        )
+        for bi in range(bands)
+    ])
+
+
+def _blocked_pairs(a: DataFrame, b: DataFrame, keys, directed: bool = False,
+                   on: Column | None = None, carry=()) -> DataFrame:
+    """The candidate join: rows of ``a`` and ``b`` (each an ``_id`` plus
+    the ``keys`` columns) that agree on every key, with ``a._id < b._id``
+    (``!=`` when ``directed``) and the optional extra predicate ``on`` —
+    one equi-join shuffle. Returns distinct ``(id_a, id_b)`` plus the
+    ``carry`` columns; ``on`` and ``carry`` are expressions over the
+    ``a``/``b`` aliases."""
+    ia, ib = F.col("a._id"), F.col("b._id")
+    cond = reduce(
+        lambda x, y: x & y,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys],
+        (ia != ib) if directed else (ia < ib),
+    )
+    if on is not None:
+        cond = cond & on
+    return (
+        a.alias("a").join(b.alias("b"), cond)
+        .select(ia.alias("id_a"), ib.alias("id_b"), *carry)
+        .distinct()
+    )
+
+
+def _prefix_candidates(sets: DataFrame, t: float, directed: bool) -> DataFrame:
+    """Candidate pairs of the (``_id``, ``_v``) hashed sets by exact prefix
+    filtering (AllPairs / PPJoin): under ANY global token order shared
+    by all docs, an overlap >= ceil(t*|A|) forces B to hit one of A's
+    first |A|-ceil(t*|A|)+1 tokens (otherwise the whole intersection fits
+    in the last ceil(t*|A|)-1). Ordering tokens RAREST-FIRST makes those
+    prefix tokens the low-frequency ones, so the candidate join
+    multiplies short posting lists — the difference between O(sum f^2)
+    over every token and over only the rare ones. Exactness is
+    preserved: prefix only generates CANDIDATES; the caller verifies
+    every pair with the true intersection.
+
+    Directed (containment) pairs are (A, B) with A != B. Undirected
+    (jaccard) pairs test only id_a < id_b — jaccard >= t gives
+    |A ∩ B| >= t*max(|A|, |B|), so EACH side's prefix hits the other —
+    and add jaccard's length filter: |B| in [t*|A|, |A|/t]."""
+    from pyspark.sql.window import Window
+
+    posting = sets.select("_id", F.explode("_v").alias("_tok"))
+    tok_df = posting.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
+    w = Window.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("_tok").asc())
+    ranked = posting.join(tok_df, "_tok").withColumn("_r", F.row_number().over(w))
+    sizes = sets.select("_id", F.size("_v").alias("_n"))
+    k = F.col("_n") - F.ceil(F.lit(t) * F.col("_n")) + 1
+    pref = ranked.join(sizes, "_id").filter(F.col("_r") <= k).select("_id", "_tok", "_n")
+    if directed:
+        return _blocked_pairs(pref, posting, ["_tok"], directed=True)
+    ratio = (F.col("b._n") >= F.ceil(F.lit(t) * F.col("a._n"))) & (
+        F.col("b._n") * F.lit(t) <= F.col("a._n")
+    )
+    return _blocked_pairs(pref, posting.join(sizes, "_id"), ["_tok"], on=ratio)
+
+
+def _candidate_sets(df: DataFrame, cand: DataFrame, id_col: str, items: Column) -> DataFrame:
+    """The persisted (``_id``, ``_v``) item sets of only the docs in some
+    candidate pair: at scale candidates are a tiny fraction of the
+    corpus, so the set build must not run over every row. Persisted
+    because ``_verified`` reads it from BOTH sides of the pair join
+    (different join keys, so AQE exchange reuse can't kick in); bounded
+    by the candidate set and LRU-evictable. Docs with no items (NULL
+    text) are dropped, so they never verify."""
+    cand_ids = (
+        cand.select(F.col("id_a").alias("_cid"))
+        .union(cand.select(F.col("id_b")))
+        .distinct()
+    )
+    # No broadcast hint: on template-heavy corpora the candidate-id set is
+    # corpus-scale (~13M ids at sf0.1, PERF.md), and a forced broadcast
+    # would blow the driver/executor broadcast limits at 100 TB. AQE picks
+    # the strategy (broadcast when small, shuffled semi when not).
+    relevant = df.join(cand_ids, df[id_col] == F.col("_cid"), "left_semi")
+    return (
+        relevant.select(F.col(id_col).alias("_id"), items.alias("_v"))
+        .filter(F.col("_v").isNotNull())
+        .persist()
+    )
+
+
+def _verified(cand: DataFrame | None, sides: DataFrame, metric: Column, keep,
+              name: str) -> DataFrame:
+    """Exact verification: joins each candidate pair (``id_a``, ``id_b``)
+    to both sides' ``_v`` values of ``sides`` (as ``_va``, ``_vb``),
+    computes ``metric`` over them, keeps the pairs where ``keep(metric)``
+    holds and rounds the metric to 6 places as ``name``. ``cand`` None
+    verifies every pair id_a < id_b (the brute-force baseline)."""
+    va = sides.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
+    vb = sides.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
+    if cand is None:
+        pairs = va.join(vb, F.col("id_a") < F.col("id_b"))
+    else:
+        pairs = cand.join(va, "id_a").join(vb, "id_b")
+    return (
+        pairs.withColumn(name, metric)
+        .filter(keep(F.col(name)))
+        .select("id_a", "id_b", F.round(name, 6).alias(name))
+    )
+
+
+def _overlap() -> Column:
+    """|A ∩ B| of the two sides of a ``_verified`` pair."""
+    return F.size(F.array_intersect(F.col("_va"), F.col("_vb")))
+
+
+def _larger_ids(pairs: DataFrame, id_col: str) -> DataFrame:
+    """The larger id of every (``id_a`` < ``id_b``) pair, distinct, as
+    ``id_col``: the rows a keep-the-lowest-id dedup drops."""
+    return pairs.select(F.col("id_b").alias(id_col)).distinct()
+
+
+# ---------------------------------------------------------------------------
 # N-gram Jaccard (exact, inverted-index join)
 # ---------------------------------------------------------------------------
 
@@ -70,71 +229,19 @@ def jaccard_similar_pairs(
     skew at scale; exactness is preserved only when it is None.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
     """
-    from pyspark.sql.window import Window
-
-    toks = F.array_distinct(T.tokens(F.col(text_col))) if ngram == 1 else F.array_distinct(
-        T.word_shingles(F.col(text_col), k=ngram)
-    )
-    # token sets as sorted xxhash64 arrays: the joins only test equality,
-    # and 8-byte keys shrink every shuffle vs raw strings (collision odds
-    # across a corpus vocabulary are ~|V|^2/2^65).
-    hset = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(F.transform(toks, lambda t: F.xxhash64(t))).alias("_hs"),
-    )
-    posting = hset.select("_id", F.explode("_hs").alias("_tok"))
+    sets = df.select(F.col(id_col).alias("_id"), _hashed_set(F.col(text_col), ngram).alias("_v"))
     if max_token_doc_freq is not None:
-        n_docs = df.count()
-        cap = int(max_token_doc_freq * n_docs)
+        cap = int(max_token_doc_freq * df.count())
+        posting = sets.select("_id", F.explode("_v").alias("_tok"))
         hot = posting.groupBy("_tok").count().filter(F.col("count") > cap).select("_tok")
-        posting = posting.join(F.broadcast(hot), "_tok", "left_anti")
-        hset = posting.groupBy("_id").agg(F.array_sort(F.collect_list("_tok")).alias("_hs"))
-
-    # Exact prefix filtering (AllPairs / PPJoin): under ANY global token
-    # order shared by all docs, a pair with jaccard >= t has overlap
-    # >= ceil(t*|A|), so B must hit one of A's first |A|-ceil(t*|A|)+1
-    # tokens (otherwise the whole intersection fits in the last
-    # ceil(t*|A|)-1). Ordering tokens RAREST-FIRST makes those prefix
-    # tokens the low-frequency ones, so the candidate join multiplies
-    # short posting lists — the difference between O(sum f^2) over every
-    # token and over only the rare ones. Exactness is preserved: prefix
-    # only generates CANDIDATES; every pair is verified with the true
-    # intersection below.
-    tok_df = posting.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("_tok").asc())
-    ranked = posting.join(tok_df, "_tok").withColumn("_r", F.row_number().over(w))
-    sizes = hset.select("_id", F.size("_hs").alias("_n"))
-    k = F.col("_n") - F.ceil(F.lit(float(threshold)) * F.col("_n")) + 1
-    pref = ranked.join(sizes, "_id").filter(F.col("_r") <= k).select("_id", "_tok", "_n")
-
-    # length filter (PPJoin): jaccard >= t bounds the size ratio —
-    # |B| in [t*|A|, |A|/t] — pruned inside the candidate join
-    t = float(threshold)
-    a, b = pref.alias("a"), posting.join(sizes, "_id").alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a._tok") == F.col("b._tok"))
-            & (F.col("a._id") != F.col("b._id"))
-            & (F.col("b._n") >= F.ceil(F.lit(t) * F.col("a._n")))
-            & (F.col("b._n") * F.lit(t) <= F.col("a._n")),
+        sets = (
+            posting.join(F.broadcast(hot), "_tok", "left_anti")
+            .groupBy("_id").agg(F.array_sort(F.collect_list("_tok")).alias("_v"))
         )
-        .select(
-            F.least(F.col("a._id"), F.col("b._id")).alias("id_a"),
-            F.greatest(F.col("a._id"), F.col("b._id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    va = hset.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_ha"))
-    vb = hset.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hb"))
-    inter = F.size(F.array_intersect(F.col("_ha"), F.col("_hb")))
-    jac = inter / (F.size("_ha") + F.size("_hb") - inter)
-    return (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    inter = _overlap()
+    jac = inter / (F.size("_va") + F.size("_vb") - inter)
+    cand = _prefix_candidates(sets, float(threshold), directed=False)
+    return _verified(cand, sets, jac, lambda j: j >= threshold, "jaccard")
 
 
 # ---------------------------------------------------------------------------
@@ -206,68 +313,29 @@ def minhash_lsh_pairs(
     false positives — LSH only bounds recall.
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    rows = num_perm // bands
     # persist: the signature is read by banding, which references _sig once
     # per band — projection collapse would otherwise re-inline the minhash
     # aggregation per reference.
     sig = minhash_signature(df, id_col, text_col, num_perm, shingle_k).persist()
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.xxhash64(*[F.col("_sig")[bi * rows + r] for r in range(rows)]).alias("bucket"),
-        )
-        for bi in range(bands)
-    ])
-    buckets = sig.select("_id", F.explode(band_structs).alias("b")).select(
-        "_id", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a._id") < F.col("b._id")))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    # Exact-Jaccard verification builds shingle STRING sets only for docs
-    # that appear in some candidate pair — at scale candidates are a tiny
-    # fraction of the corpus, so the (interpreted) string shingling must not
-    # run over every row. Candidates are persisted + materialized (they feed
-    # both the id filter and the final join; a localCheckpoint would bypass
-    # AQE on the banding join), and the signature cache — the big one — is
-    # released immediately so repeated calls don't accumulate executor state.
-    cand = cand.persist()
+    buckets = sig.select(
+        "_id", F.explode(_band_keys(F.col("_sig"), bands, num_perm // bands)).alias("k")
+    ).select("_id", "k.band", "k.bucket")
+    # Candidates are persisted + materialized (they feed both the id filter
+    # and the final join; a localCheckpoint would bypass AQE on the banding
+    # join), then the signature cache — the big, corpus-wide one — is
+    # released. The candidate and shingle-set caches stay: the returned
+    # frame is lazy and reads both, so they cannot be released before the
+    # caller runs it. Both are bounded by the candidate set and
+    # LRU-evictable, and an identical later call (same input plan) finds
+    # them by plan and skips the banding join and the shingling.
+    cand = _blocked_pairs(buckets, buckets, ["band", "bucket"]).persist()
     cand.count()
     sig.unpersist()
-    cand_ids = (
-        cand.select(F.col("id_a").alias("_cid"))
-        .union(cand.select(F.col("id_b")))
-        .distinct()
-    )
-    # No broadcast hint: on template-heavy corpora the candidate set is
-    # corpus-scale, and a forced broadcast would blow the driver/executor
-    # broadcast limits at 100 TB. AQE picks the strategy (broadcast when
-    # small, shuffled semi when not) — same discipline as containment_lsh.
-    relevant = df.join(cand_ids, df[id_col] == F.col("_cid"), "left_semi")
-    # persisted: referenced by BOTH sides of the pair join — without the
-    # cache each side re-runs the scan + semi-join filter + string shingling
-    # (different join keys, so AQE exchange reuse can't kick in). Bounded by
-    # the candidate set, and LRU-evictable.
-    shingle_sets = relevant.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(T.word_shingles(F.col(text_col), k=shingle_k)).alias("_set"),
-    ).persist()
-    sets_a = shingle_sets.select(F.col("_id").alias("id_a"), F.col("_set").alias("_sa"))
-    sets_b = shingle_sets.select(F.col("_id").alias("id_b"), F.col("_set").alias("_sb"))
-    jac = (
-        F.size(F.array_intersect("_sa", "_sb"))
-        / F.size(F.array_union("_sa", "_sb"))
-    ).cast("double")
-    return (
-        cand.join(sets_a, "id_a").join(sets_b, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    # exact Jaccard on shingle STRING sets, built only for candidate docs:
+    # the (interpreted) string shingling must not run over every row
+    shingle_sets = _candidate_sets(df, cand, id_col, _item_set(F.col(text_col), shingle_k))
+    jac = _overlap() / F.size(F.array_union("_va", "_vb"))
+    return _verified(cand, shingle_sets, jac, lambda j: j >= threshold, "jaccard")
 
 
 # ---------------------------------------------------------------------------
@@ -294,8 +362,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, nbits: int = 64,
     result is bit-identical to the expression form in any order."""
     from pyspark.sql.types import LongType
 
-    toks = F.array_distinct(T.tokens(F.col(text_col)))
-    th = F.transform(toks, hash_fn or (lambda t: F.xxhash64(t)))
+    th = F.transform(_item_set(F.col(text_col)), hash_fn or (lambda t: F.xxhash64(t)))
     shifts = np.arange(nbits, dtype=np.uint64)
 
     @F.pandas_udf(LongType())
@@ -339,16 +406,11 @@ def simhash_near_dup_pairs(
         for ci in range(chunks)
     ])
     blocked = sig.select("_id", "simhash", F.explode(chunk_structs).alias("c")).select(
-        "_id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv")
+        "_id", "simhash", "c.ci", "c.cv"
     )
-    a, b = blocked.alias("a"), blocked.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, (F.col("a.ci") == F.col("b.ci")) & (F.col("a.cv") == F.col("b.cv"))
-               & (F.col("a._id") < F.col("b._id")))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"), ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _blocked_pairs(
+        blocked, blocked, ["ci", "cv"], on=ham <= max_hamming, carry=[ham.alias("hamming")]
     )
 
 
@@ -365,15 +427,9 @@ def embedding_near_dup_pairs(
     (``embedding_near_dup_pairs_lsh``), which is the 100 TB path.
     Returns (id_a, id_b, cosine rounded to 6dp).
     """
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    vecs = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     cos = V.cosine(F.col("_va"), F.col("_vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _verified(None, vecs, cos, lambda c: c >= threshold, "cosine")
 
 
 def embedding_near_dup_pairs_lsh(
@@ -421,22 +477,10 @@ def embedding_near_dup_pairs_lsh(
         F.col(id_col).alias("_id"),
         F.posexplode(_sigs(V.as_double(F.col(vec_col)))).alias("t", "sig"),
     )
-    a, b = blocked.alias("a"), blocked.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.t") == F.col("b.t")) & (F.col("a.sig") == F.col("b.sig"))
-               & (F.col("a._id") < F.col("b._id")))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    pairs = _blocked_pairs(blocked, blocked, ["t", "sig"])
+    vecs = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     cos = V.cosine(F.col("_va"), F.col("_vb"))
-    return (
-        pairs.join(va, "id_a").join(vb, "id_b")
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _verified(pairs, vecs, cos, lambda c: c >= threshold, "cosine")
 
 
 def duplicate_window_stats(
@@ -1087,48 +1131,10 @@ def containment_pairs(
     verified with this containment formula, or a canonical-doc dedup
     BEFORE containment so clusters are singletons.
     """
-    from pyspark.sql.window import Window
-
-    toks = F.array_distinct(T.tokens(F.col(text_col))) if ngram == 1 else F.array_distinct(
-        T.word_shingles(F.col(text_col), k=ngram)
-    )
-    hset = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(F.transform(toks, lambda t: F.xxhash64(t))).alias("_hs"),
-    )
-    posting = hset.select("_id", F.explode("_hs").alias("_tok"))
-    tok_df = posting.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("_tok").asc())
-    ranked = posting.join(tok_df, "_tok").withColumn("_r", F.row_number().over(w))
-    sizes = hset.select("_id", F.size("_hs").alias("_n"))
     t = float(threshold)
-    k = F.col("_n") - F.ceil(F.lit(t) * F.col("_n")) + 1
-    pref = ranked.join(sizes, "_id").filter(F.col("_r") <= k).select("_id", "_tok")
-
-    a, b = pref.alias("a"), posting.alias("b")
-    cand = (
-        a.join(b, (F.col("a._tok") == F.col("b._tok")) & (F.col("a._id") != F.col("b._id")))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
-    return _verify_containment(cand, hset, t)
-
-
-def _verify_containment(cand: DataFrame, hset: DataFrame, t: float) -> DataFrame:
-    """Exact containment check over directed candidate pairs: joins each
-    side's full token-hash set and keeps C(A→B) = |A∩B|/|A| >= t. Shared
-    by the exact prefix-filter baseline and the LSH candidate route, so
-    both emit identical values for identical surviving pairs."""
-    va = hset.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_ha"))
-    vb = hset.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hb"))
-    inter = F.size(F.array_intersect(F.col("_ha"), F.col("_hb")))
-    cont = inter / F.size("_ha")
-    return (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .withColumn("containment", cont)
-        .filter(F.col("containment") >= t)
-        .select("id_a", "id_b", F.round("containment", 6).alias("containment"))
-    )
+    sets = df.select(F.col(id_col).alias("_id"), _hashed_set(F.col(text_col), ngram).alias("_v"))
+    cand = _prefix_candidates(sets, t, directed=True)
+    return _verified(cand, sets, _overlap() / F.size("_va"), lambda c: c >= t, "containment")
 
 
 def _lsh_rows_per_band(jmin: float, num_perm: int, miss_target: float) -> int:
@@ -1198,17 +1204,14 @@ def containment_lsh_pairs(
     duplicate clusters — that is the answer's size, not the algorithm's.
     """
     t = float(threshold)
-    toks = F.array_distinct(T.tokens(F.col(text_col))) if ngram == 1 else F.array_distinct(
-        T.word_shingles(F.col(text_col), k=ngram)
-    )
     sig = minhash_signature(df, id_col, text_col, num_perm, shingle_k=ngram, seed=seed)
-    nset = df.select(F.col(id_col).alias("_id"), F.size(toks).alias("_n")).filter(
-        F.col("_n") > 0
-    )
+    nset = df.select(
+        F.col(id_col).alias("_id"), F.size(_item_set(F.col(text_col), ngram)).alias("_n")
+    ).filter(F.col("_n") > 0)
     stratum = F.floor(F.log(float(size_base), F.col("_n").cast("double"))).cast("int")
-    # persisted AND materialized up front: keys() references this from BOTH
-    # join sides within one job — an unmaterialized cache would be computed
-    # (Arrow minhash kernel over the corpus) once per branch
+    # persisted AND materialized up front: the key table references this
+    # from BOTH join sides within one job — an unmaterialized cache would be
+    # computed (Arrow minhash kernel over the corpus) once per branch
     sized = (
         nset.join(sig, "_id").withColumn("_s", F.greatest(stratum, F.lit(0))).persist()
     )
@@ -1227,14 +1230,18 @@ def containment_lsh_pairs(
     }
 
     # One exploded key table carrying BOTH roles: the contained side
-    # probes UP into the container's stratum (ksp = s + d); the container
+    # probes UP into the container's stratum (ks = s + d); the container
     # side publishes at its own stratum (ks = s). All bucket hashes come
     # from ONE Arrow kernel returning a position-indexed array — a
     # ~(gaps * num_perm)-wide struct expression here blows janino's 64 KB
     # codegen method limit and silently drops the whole stage to
     # interpreted eval (observed: compile error in the logs + ~4x the
-    # runtime). Positions map to (gap, band) via a tiny broadcast table.
+    # runtime). Positions map to (gap, band) through two literal arrays:
+    # a driver-built table would be a new RDD per call, so no later call's
+    # plan could match the caches this one leaves.
     from pyspark.sql.types import ArrayType, LongType
+
+    from sycamore_spark.operators.similarity import _bigints
 
     layout = [(d, bi) for d in gaps for bi in range(bands_for_gap[d])]
     gap_specs = [(rows_for_gap[d], bands_for_gap[d]) for d in gaps]
@@ -1259,59 +1266,29 @@ def containment_lsh_pairs(
             out.append(np.concatenate(parts).view(np.int64))
         return pd.Series(out)
 
-    mapping = df.sparkSession.createDataFrame(
-        [(i, d, bi) for i, (d, bi) in enumerate(layout)], "pos int, kd int, kb int"
-    )
+    pos = F.col("_pos") + 1
     kdf = (
-        sized.select("_id", "_s", F.posexplode(_buckets("_sig")).alias("pos", "kh"))
-        .join(F.broadcast(mapping), "pos")
+        sized.select("_id", "_s", F.posexplode(_buckets("_sig")).alias("_pos", "kh"))
         .select(
             "_id",
-            (F.col("_s") + F.col("kd")).alias("ksp"),
-            F.col("_s").alias("ks"),
-            "kd",
-            "kb",
+            F.col("_s").cast("long").alias("ks"),
+            F.element_at(_bigints(d for d, _ in layout), pos).alias("kd"),
+            F.element_at(_bigints(bi for _, bi in layout), pos).alias("kb"),
             "kh",
         )
         .persist()
     )
     kdf.count()
-    a, b = kdf.alias("a"), kdf.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.ksp") == F.col("b.ks"))
-            & (F.col("a.kd") == F.col("b.kd"))
-            & (F.col("a.kb") == F.col("b.kb"))
-            & (F.col("a.kh") == F.col("b.kh"))
-            & (F.col("a._id") != F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
+    probe = kdf.select("_id", (F.col("ks") + F.col("kd")).alias("ks"), "kd", "kb", "kh")
     # materialize candidates, then release the corpus-wide signature cache;
-    # exact token-hash sets are built only for docs that appear in some
-    # candidate pair (minhash_lsh_pairs discipline — candidate-bounded cache)
-    cand = cand.persist()
+    # exact token-hash sets are built only for candidate docs
+    cand = _blocked_pairs(probe, kdf, ["ks", "kd", "kb", "kh"], directed=True).persist()
     cand.count()
     kdf.unpersist()
     sized.unpersist()
-    cand_ids = (
-        cand.select(F.col("id_a").alias("_cid"))
-        .union(cand.select(F.col("id_b")))
-        .distinct()
-    )
-    # left_semi with NO broadcast hint: the candidate-id set is corpus-scale on
-    # template-heavy corpora (~13M ids at sf0.1, PERF.md), so a forced broadcast
-    # would blow the driver/executor broadcast limits at 100 TB. AQE picks the
-    # strategy (broadcast when small, shuffled semi when not).
-    relevant = df.join(cand_ids, df[id_col] == F.col("_cid"), "left_semi")
-    hset = relevant.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(F.transform(toks, lambda x: F.xxhash64(x))).alias("_hs"),
-    ).persist()
-    hset.count()  # materialize before the dual (id_a, id_b) join branches
-    return _verify_containment(cand, hset, t)
+    hsets = _candidate_sets(df, cand, id_col, _hashed_set(F.col(text_col), ngram))
+    hsets.count()  # materialize before the dual (id_a, id_b) join branches
+    return _verified(cand, hsets, _overlap() / F.size("_va"), lambda c: c >= t, "containment")
 
 
 def soft_dedup(
@@ -1485,9 +1462,8 @@ def paragraph_dedup(
         eligible, "_wid", "_wtext", threshold=threshold,
         num_perm=num_perm, bands=bands, shingle_k=shingle_k,
     )
-    removed = pairs.select(F.col("id_b").alias("_wid")).distinct()
     spans = lineage_cut(
-        wins.join(removed, "_wid", "left_semi")
+        wins.join(_larger_ids(pairs, "_wid"), "_wid", "left_semi")
         .select(
             F.col("_did").alias(id_col),
             F.col("_widx"),
@@ -1587,7 +1563,6 @@ def instruction_pool_filter(
     from sycamore_spark.evaluation import _lcs_len
 
     thr_micros = int(np.floor(threshold * 1e6 + 0.5))
-    rows = num_perm // bands
 
     def _prep(df: DataFrame, side: str) -> DataFrame:
         return df.select(
@@ -1605,15 +1580,9 @@ def instruction_pool_filter(
                 F.array_join(F.col(f"_{side}tk"), " "), num_perm, shingle_k, seed
             ).alias("_sig"),
         )
-        band_structs = F.array(*[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(*[F.col("_sig")[bi * rows + r] for r in range(rows)]).alias("bucket"),
-            )
-            for bi in range(bands)
-        ])
-        return sig.select(f"_{side}id", F.explode(band_structs).alias("bb")).select(
-            f"_{side}id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+        keys = _band_keys(F.col("_sig"), bands, num_perm // bands)
+        return sig.select(f"_{side}id", F.explode(keys).alias("k")).select(
+            f"_{side}id", "k.band", "k.bucket"
         )
 
     # Degenerate rows (< shingle_k tokens -> empty minhash signature) are

@@ -38,8 +38,7 @@ def sketch_uniquify(df: DataFrame, id_col: str = "doc_id", text_col: str = "text
     *larger* id of some qualifying pair — same keep-first-seen semantics as
     the reference's sequential scan for pairwise clusters)."""
     pairs = dedup.minhash_lsh_pairs(df, id_col, text_col, threshold, num_perm, bands, shingle_k)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return df.join(dedup._larger_ids(pairs, id_col), id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -90,27 +89,17 @@ def rolling_sketch_pairs(df: DataFrame, id_col: str = "doc_id",
     from sycamore_spark.functions.text import shingles_dist
 
     sk = rolling_sketch(df, id_col, text_col, window, number).select(
-        F.col(id_col).alias("_id"), "shingles"
+        F.col(id_col).alias("_id"), F.col("shingles").alias("_v")
     ).persist()
-    posting = sk.select("_id", F.explode("shingles").alias("_h")).distinct()
-    a, b = posting.alias("a"), posting.alias("b")
-    cand = (
-        a.join(b, (F.col("a._h") == F.col("b._h")) & (F.col("a._id") < F.col("b._id")))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
+    posting = sk.select("_id", F.explode("_v").alias("_h")).distinct()
+    cand = dedup._blocked_pairs(posting, posting, ["_h"])
 
     @F.pandas_udf(DoubleType())
     def _dist(sa: pd.Series, sb: pd.Series) -> pd.Series:
         return pd.Series([shingles_dist(list(x), list(y)) for x, y in zip(sa, sb)])
 
-    ska = sk.select(F.col("_id").alias("id_a"), F.col("shingles").alias("_ska"))
-    skb = sk.select(F.col("_id").alias("id_b"), F.col("shingles").alias("_skb"))
-    out = (
-        cand.join(ska, "id_a").join(skb, "id_b")
-        .withColumn("dist", _dist(F.col("_ska"), F.col("_skb")))
-        .filter(F.col("dist") < threshold)
-        .select("id_a", "id_b", F.round("dist", 6).alias("dist"))
+    out = dedup._verified(
+        cand, sk, _dist(F.col("_va"), F.col("_vb")), lambda d: d < threshold, "dist"
     )
     # materialize the (small, pairs-only) result through the cache, then
     # release it — persisted operators must not leak executor state
@@ -124,5 +113,4 @@ def rolling_sketch_uniquify(df: DataFrame, id_col: str = "doc_id",
                             threshold: float = 0.4) -> DataFrame:
     """SketchUniquify parity: drop the larger id of every near-dup pair."""
     pairs = rolling_sketch_pairs(df, id_col, text_col, threshold)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    return df.join(dedup._larger_ids(pairs, id_col), id_col, "left_anti")

@@ -1,5 +1,6 @@
 """Dedup operator semantics on crafted near-duplicates."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from sycamore_spark.operators import dedup, sketcher
@@ -713,3 +714,54 @@ def test_instruction_pool_filter_degenerate_fragments(spark):
     )
     kept = {r.doc_id for r in instruction_pool_filter(batch, pool).collect()}
     assert kept == {2}  # 1 exact-dup of pool; 3 near-dup (F1 = 10/12)
+
+
+# -- the pair core ------------------------------------------------------------
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_null_text_is_never_a_duplicate(spark, ansi):
+    """NULL text has no items, so no pair operator pairs it and uniquify
+    keeps every NULL-text doc. With ANSI off ``size(NULL)`` is -1, and two
+    NULL shingle sets scored -1/-1 = 1.0."""
+    with_nulls = spark.createDataFrame(DOCS + [(6, None), (7, None)], "doc_id int, text string")
+
+    def pairs(docs):
+        return [
+            sorted(tuple(r) for r in op.collect()) for op in (
+                dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5),
+                dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5, shingle_k=1),
+                dedup.jaccard_similar_pairs(docs, "doc_id", "text", threshold=0.5, ngram=2),
+                dedup.containment_pairs(docs, "doc_id", "text", threshold=0.5, ngram=2),
+                dedup.containment_lsh_pairs(docs, "doc_id", "text", threshold=0.8, ngram=2),
+            )
+        ]
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        assert pairs(with_nulls) == pairs(_df(spark))
+        kept = sketcher.sketch_uniquify(
+            with_nulls.withColumnRenamed("text", "text_representation"), threshold=0.6
+        )
+        assert {r.doc_id for r in kept.collect()} == {1, 3, 6, 7}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+
+
+def test_containment_lsh_repeated_calls_add_no_caches(spark):
+    """The candidate and set caches a call leaves are found by plan on an
+    identical later call, so three calls leave as many persisted RDDs as
+    one (a driver-built lookup table made every call's plan new)."""
+    df = _df(spark)
+    jsc = spark.sparkContext._jsc
+
+    def call():
+        out = dedup.containment_lsh_pairs(df, "doc_id", "text", threshold=0.9)
+        return sorted(tuple(r) for r in out.collect())
+
+    first = call()
+    after_one = jsc.getPersistentRDDs().size()
+    assert call() == first
+    assert call() == first
+    assert jsc.getPersistentRDDs().size() == after_one
