@@ -1473,11 +1473,13 @@ class DocSet:
         that role natively)."""
         import os
 
+        from sycamore_spark.store import read_parquet
+
         spark = self.spark
         if source_mode == "USE_STORED" and os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self._wrap(spark.read.parquet(path))
+            return self._wrap(read_parquet(spark, path))
         self.df.write.mode("overwrite").parquet(path)
-        return self._wrap(spark.read.parquet(path))
+        return self._wrap(read_parquet(spark, path))
 
     def persist(self) -> "DocSet":
         return self._wrap(self.df.persist())

@@ -100,7 +100,9 @@ def fold_touched_buckets(
     buckets or the new rows' buckets), one collect of the old buckets of
     the delta ids (not with ``bucket_of_id``), then the overwrite: one
     shuffle by bucket, shared by ``rebuild`` and the write, and the write
-    itself. The shuffle has at most one partition per slot
+    itself. Reading ``store`` costs none when the caller reads it with
+    ``store.read_parquet`` (the schema comes from one footer on the
+    driver), as the postings, norms and ANN folds do. The shuffle has at most one partition per slot
     (``defaultParallelism``); a bucket lands in one partition, so each
     touched bucket is still written as one file. The ids go back into the
     plan as a literal id list, so neither the old-bucket scan nor the

@@ -23,6 +23,7 @@ LLM stage from rerunning because a downstream join OOMed.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -37,9 +38,23 @@ _ACTIVE: Optional["AutoMaterialize"] = None
 # os.path check silently breaks resume for any non-local out_root) ----------
 
 
+def jvm_handle(spark, dotted: str):
+    """``spark._jvm.<dotted>`` (a class, a static method or a static
+    field), looked up once per JVM: every dotted step of a py4j
+    ``jvm.a.b.C`` walk is a round trip into the JVM."""
+    return _jvm_handle(spark._jvm, dotted)
+
+
+@functools.lru_cache(maxsize=64)
+def _jvm_handle(jvm, dotted: str):
+    handle = jvm
+    for name in dotted.split("."):
+        handle = getattr(handle, name)
+    return handle
+
+
 def _hadoop_fs(spark, path_str: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path_str)
+    hpath = jvm_handle(spark, "org.apache.hadoop.fs.Path")(path_str)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, hpath
 
@@ -68,7 +83,7 @@ def _fs_write_text(spark, path_str: str, text: str) -> None:
     local = fs.getScheme() == "file"
     if local:
         fs = fs.getRawFileSystem()
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = jvm_handle(spark, "org.apache.hadoop.fs.Path")
     tmp = Path(p.getParent(), f".{p.getName()}.{uuid.uuid4().hex}.tmp")
     stream = fs.create(tmp, False)
     try:
@@ -130,14 +145,18 @@ class AutoMaterialize:
         """Return the stored stage output iff complete and USE_STORED."""
         if self.source_mode != "USE_STORED":
             return None
+        from sycamore_spark.store import read_parquet
+
         spark = df_like.sparkSession
         if _fs_exists(spark, os.path.join(path, "_SUCCESS")):
-            return spark.read.parquet(path)
+            return read_parquet(spark, path)
         return None
 
     def write(self, df: DataFrame, path: str) -> DataFrame:
+        from sycamore_spark.store import read_parquet
+
         df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+        return read_parquet(df.sparkSession, path)
 
 
 def enable(root: str, source_mode: str = "USE_STORED") -> AutoMaterialize:
@@ -234,7 +253,9 @@ def reliable_materialize(
             retries += 1
             if retries > max_retries:
                 raise
-    return df.sparkSession.read.parquet(os.path.join(out_root, "batch-*"))
+    from sycamore_spark.store import read_parquet
+
+    return read_parquet(df.sparkSession, os.path.join(out_root, "batch-*"))
 
 
 def checkpoint_stage(build, df: DataFrame, kind: str, *key_parts: str, name: str | None = None) -> DataFrame:

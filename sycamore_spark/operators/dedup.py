@@ -316,7 +316,12 @@ def minhash_lsh_pairs(
     # persist: the signature is read by banding, which references _sig once
     # per band — projection collapse would otherwise re-inline the minhash
     # aggregation per reference.
-    sig = minhash_signature(df, id_col, text_col, num_perm, shingle_k).persist()
+    # NULL text has no shingles and never verifies (``_candidate_sets``
+    # drops it), so it gets no band keys: otherwise every NULL-text doc
+    # shares one signature and collides with every other in each band.
+    sig = minhash_signature(
+        df.filter(F.col(text_col).isNotNull()), id_col, text_col, num_perm, shingle_k
+    ).persist()
     buckets = sig.select(
         "_id", F.explode(_band_keys(F.col("_sig"), bands, num_perm // bands)).alias("k")
     ).select("_id", "k.band", "k.bucket")
@@ -377,7 +382,11 @@ def simhash(df: DataFrame, id_col: str, text_col: str, nbits: int = 64,
             out[i] = ((contrib > 0).astype(np.uint64) << shifts).sum()
         return pd.Series(out.view(np.int64))
 
-    return df.select(F.col(id_col).alias("_id"), _vote(th).alias("simhash"))
+    # the vote never returns NULL; coalesce says so to the optimizer, which
+    # would otherwise push an inferred isnotnull(simhash) filter below the
+    # projection as a second evaluation of the UDF
+    vote = F.coalesce(_vote(th), F.lit(0).cast("long"))
+    return df.select(F.col(id_col).alias("_id"), vote.alias("simhash"))
 
 
 def simhash_near_dup_pairs(
@@ -395,9 +404,10 @@ def simhash_near_dup_pairs(
     """
     width = nbits // chunks
     mask = (1 << width) - 1
-    # persist: chunk extraction references the (expensive) signature several
-    # times; see minhash_lsh_pairs.
-    sig = simhash(df, id_col, text_col, nbits, hash_fn=hash_fn).persist()
+    # no cache: both sides of the blocking join read one exchange of the
+    # chunk rows (AQE reuses it), so the vote still runs once per row and
+    # no corpus-sized cache outlives the call
+    sig = simhash(df, id_col, text_col, nbits, hash_fn=hash_fn)
     chunk_structs = F.array(*[
         F.struct(
             F.lit(ci).alias("ci"),

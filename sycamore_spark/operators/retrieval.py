@@ -768,7 +768,20 @@ def bm25_from_index(
     job also computes each query's distinct terms and their buckets (with
     the index's own hash expression), and the (query, term) rows re-enter
     the plan as a driver-built ``LocalRelation``, so the caller's frame is
-    never scanned again."""
+    never scanned again. When only one query has terms, the matched
+    postings are that query's already (the scan keeps its terms), so its
+    id joins them as a literal and nothing is broadcast for it.
+
+    Jobs: six for one query on a small store (4 cores), seven for a frame
+    of several. The query collect, then the scored plan's: the broadcast
+    of the query terms (several queries only), the broadcasts of the
+    norms (AQE's choice at this size) and of the stats row, the stats
+    aggregate's stage, the one shuffle by query id, and the result. That
+    shuffle (``min(queries, defaultParallelism)`` partitions)
+    serves both the (query, doc) sum and the rank window, which would
+    otherwise shuffle twice. Neither store read runs a schema-inference
+    job: ``store.read_parquet`` takes each schema from one footer on the
+    driver."""
     q_rows = collect_bounded(
         queries.select(
             F.col(query_id_col).alias("_qid"),
@@ -786,24 +799,29 @@ def bm25_from_index(
     if not wanted:
         raise ValueError("queries contain no terms")
     bkts = sorted({b for _, _, b in term_rows})
-    qterms = local_frame(
-        spark,
-        [(qid, t) for qid, t, _ in term_rows],
-        f"_qid {queries.schema[query_id_col].dataType.simpleString()}, term string",
-    )
+    qids = {qid for qid, _, _ in term_rows}
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
     posts = (
-        spark.read.parquet(index_dir)
+        store.read_parquet(spark, index_dir)
         .filter(F.col(bucket_col).isin(bkts))     # prunes at file listing
         .filter(F.col("term").isin(wanted))
         .select("term", F.col(id_col).alias("_id"), "tf", "df")
     )
-    norms = spark.read.parquet(norms_dir).select(
+    if len(qids) == 1:
+        # the wanted terms are the one query's own: no (query, term) join
+        matched = posts.withColumn("_qid", F.lit(next(iter(qids))).cast(qid_type))
+    else:
+        qterms = local_frame(spark, [(qid, t) for qid, t, _ in term_rows], f"_qid {qid_type}, term string")
+        matched = qterms.join(posts, "term")
+    norms = store.read_parquet(spark, norms_dir).select(
         F.col(id_col).alias("_id"), "dl"
     )
+    n_parts = min(len(qids), spark.sparkContext.defaultParallelism)
     out = (
-        qterms.join(posts, "term")
+        matched
         .join(norms, "_id")
         .crossJoin(F.broadcast(_corpus_stats(norms, "dl")))
+        .repartition(n_parts, "_qid")  # the one shuffle of the sum and the rank window
         .groupBy("_qid", "_id")
         .agg(F.sum(_bm25_micros("tf", "df", "dl", "_n_docs", "_avgdl", k1, b)).alias("bm25_micros"))
         .select(
@@ -838,7 +856,7 @@ def rebucket_postings(
 
     Shape: one column-recompute scan + the publish's ONE hash shuffle on
     the new bucket column — the same cost as a compaction pass."""
-    cur = spark.read.parquet(store.current_dir(spark, root))
+    cur = store.read_parquet(spark, store.current_dir(spark, root))
     out = cur.drop(bucket_col).withColumn(bucket_col, _bucket(F.col("term"), n_buckets))
     return store.publish(spark, root, out.repartition(F.col(bucket_col)), bucket_col)
 

@@ -698,9 +698,11 @@ def _adc_scored(
     cumulative block offsets (codebook lengths may differ per subspace)
     plus an integer sum, all native codegen. The LUT reaches the rows
     from a LocalRelation probe table broadcast-joined on the cell for a
-    query frame (``qid_type`` = the query id's DDL type), or from a
-    literal cell -> LUT map for one vector (``qid_type=None``), where a
-    broadcast would cost the search a second job.
+    query frame of several queries (``qid_type`` = the query id's DDL
+    type), or from a literal cell -> LUT map for one vector
+    (``qid_type=None``: a single-vector search, or a batch search that
+    collected one query, see ``_pooled``), where a broadcast would cost
+    the search a second job.
 
     Returns ``([_qid,] id_col, adc_dist[, _v, _qq])``: ``_qid`` for a query
     frame; with ``vec_col`` the row's vector ``_v`` and the quantized
@@ -763,6 +765,34 @@ def _ranked(scored: DataFrame, k: int, by: str, id_col: str, rank_col: str = "ra
     """The first ``k`` rows per ``_qid`` by (``by``, id): one rank window."""
     w = Window.partitionBy("_qid").orderBy(F.col(by).asc(), F.col(id_col).asc())
     return scored.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+
+
+def _pooled(
+    encoded: DataFrame, q_rows: list, qid_type: str, n: int, rank_col: str, centroids: list,
+    codebooks: list, nprobe: int, id_col: str, cell_col: str, codes_col: str, scale: float,
+    prefilter=None, vec_col: str | None = None,
+) -> DataFrame:
+    """The first ``n`` scored rows of each query of ``q_rows`` by
+    (adc_dist, id), ranked in ``rank_col``: the cut of every batch search.
+
+    Several queries score through the broadcast probe table and rank in
+    one window. One query takes the single-vector plan instead: the
+    literal cell -> LUT map, then a TakeOrderedAndProject (each partition's
+    first ``n``, merged in one partition), with the query id as a ``_qid``
+    literal of type ``qid_type``. Its window then ranks at most ``n`` rows
+    without a shuffle, so the search runs no broadcast and no shuffle."""
+    one = len(q_rows) == 1
+    scored = _adc_scored(
+        encoded, q_rows, None if one else qid_type, centroids, codebooks, nprobe,
+        id_col, cell_col, codes_col, scale, prefilter, vec_col,
+    )
+    if one:
+        scored = (
+            scored.orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
+            .limit(n)
+            .withColumn("_qid", F.lit(q_rows[0][0]).cast(qid_type))
+        )
+    return _ranked(scored, n, "adc_dist", id_col, rank_col)
 
 
 def ivf_pq_topk(
@@ -861,6 +891,11 @@ def ivf_pq_topk_multi(
     int64 per probed cell) ship back as a small (query, cell, flat-LUT)
     table that BROADCAST-joins the encoded corpus on cell_id, and the
     per-query top-k is one rank window over the probed cells' rows.
+    A frame holding ONE query (the interactive serving case) takes the
+    single-vector plan instead (``_pooled``): the literal cell -> LUT map
+    and a TakeOrderedAndProject, then the rank window over at most ``k``
+    rows. Same rows, columns and types, in two jobs (the collect and the
+    search) instead of four: no probe broadcast, no rank shuffle.
 
     Returns (query_id, id_col, rank, adc_dist); deterministic ties by id;
     rows with null codes are excluded. Integer-exact, so a SQL oracle
@@ -868,15 +903,12 @@ def ivf_pq_topk_multi(
     encoded corpus) is filtered vector search, same contract as
     ``ivf_pq_topk``: conjoined before scoring so it pushes into the scan
     and the per-query top-k is exact over qualifying rows."""
-    scored = _adc_scored(
+    return _pooled(
         encoded,
         _collect_queries(queries, query_id, query_vec, max_queries, "ivf_pq_topk_multi"),
-        queries.schema[query_id].dataType.simpleString(), centroids, codebooks, nprobe,
-        id_col, cell_col, codes_col, scale, prefilter,
-    )
-    return _ranked(scored, k, "adc_dist", id_col).select(
-        F.col("_qid").alias(query_id), id_col, "rank", "adc_dist"
-    )
+        queries.schema[query_id].dataType.simpleString(), k, "rank", centroids, codebooks,
+        nprobe, id_col, cell_col, codes_col, scale, prefilter,
+    ).select(F.col("_qid").alias(query_id), id_col, "rank", "adc_dist")
 
 
 def ivf_pq_refine_topk(
@@ -953,13 +985,12 @@ def ivf_pq_refine_multi(
 
     Returns (query_id, id_col, rank, adc_dist, exact_dist); ties by id;
     ``prefilter`` as in ``ivf_pq_topk_multi``."""
-    scored = _adc_scored(
+    pool = _pooled(
         encoded,
         _collect_queries(queries, query_id, query_vec, max_queries, "ivf_pq_refine_multi"),
-        queries.schema[query_id].dataType.simpleString(), centroids, codebooks, nprobe,
-        id_col, cell_col, codes_col, scale, prefilter, vec_col,
+        queries.schema[query_id].dataType.simpleString(), refine * k, "_r", centroids, codebooks,
+        nprobe, id_col, cell_col, codes_col, scale, prefilter, vec_col,
     )
-    pool = _ranked(scored, refine * k, "adc_dist", id_col, "_r")
     return _ranked(
         pool.select("_qid", id_col, "adc_dist", _exact_dist(scale)), k, "exact_dist", id_col
     ).select(F.col("_qid").alias(query_id), id_col, "rank", "adc_dist", "exact_dist")
@@ -1023,15 +1054,15 @@ def ann_store_apply_changes(
     probe and the merge."""
     from sycamore_spark.functions.partitioning import fold_touched_buckets
 
-    store = spark.read.parquet(store_dir)  # a missing store is an error
+    current = store.read_parquet(spark, store_dir)  # a missing store is an error
     return fold_touched_buckets(
         store_dir,
-        store,
+        current,
         changes,
         lambda ups: ivf_pq_encode(
             ups, centroids, codebooks, vec_col=vec_col, scale=scale,
             cell_col=cell_col, codes_col=codes_col,
-        ).select(*store.columns),
+        ).select(*current.columns),
         id_col, cell_col, op_col, delete_op,
         prepared=prepared,
     )
@@ -1180,12 +1211,12 @@ def ann_reindex(
 
     cur_dir = ann_store_current_dir(spark, root)
     cur_ver = int(cur_dir.rsplit("v=", 1)[1])
-    store = spark.read.parquet(cur_dir)
+    current = store.read_parquet(spark, cur_dir)
     batch_enc = ivf_pq_encode(
         batch, centroids, codebooks, vec_col=vec_col, scale=scale,
         cell_col=cell_col, codes_col=codes_col,
     )
-    kl = categorical_divergence(store, batch_enc, cell_col).collect()[0]
+    kl = categorical_divergence(current, batch_enc, cell_col).collect()[0]
     out = {
         "retrained": False,
         "kl_ab_nanos": int(kl["kl_ab_nanos"]),

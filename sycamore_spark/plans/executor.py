@@ -26,6 +26,7 @@ from sycamore_spark.docset import DocSet
 from sycamore_spark.llm.client import LLM, MockLLM
 from sycamore_spark.plans import logical as L
 from sycamore_spark.sources.tables import load_table
+from sycamore_spark.store import read_parquet
 
 
 class PlanExecutor:
@@ -78,14 +79,14 @@ class PlanExecutor:
     def _cache_load(self, plan, node, cache_ok) -> DataFrame | None:
         p = self._cache_path(plan, node)
         if cache_ok and p and os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.read.parquet(p)
+            return read_parquet(self.spark, p)
         return None
 
     def _cache_store(self, plan, node, result, cache_ok):
         p = self._cache_path(plan, node)
         if cache_ok and p and isinstance(result, DataFrame):
             result.write.mode("overwrite").parquet(p)
-            return self.spark.read.parquet(p)
+            return read_parquet(self.spark, p)
         return result
 
     # -- dispatch (reference: make_sycamore_op, sycamore_executor.py:169-314) --
@@ -119,7 +120,7 @@ class PlanExecutor:
         )
 
     def _op_DataLoader(self, n: L.DataLoader, _):
-        return self.spark.read.parquet(n.path)
+        return read_parquet(self.spark, n.path)
 
     def _op_BasicFilter(self, n: L.BasicFilter, inputs):
         ds = DocSet(inputs[0])

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from sycamore_spark.docset import DocSet
+from sycamore_spark.store import read_parquet
 
 
 class DocSetReader:
@@ -46,7 +47,7 @@ class DocSetReader:
         return DocSet(json_document_scan(self.spark, paths))
 
     def parquet(self, path) -> DocSet:
-        return DocSet(self.spark.read.parquet(path))
+        return DocSet(read_parquet(self.spark, path))
 
     def csv(self, path, schema=None, **kwargs) -> DocSet:
         """CSV/TSV with an explicit schema (the 100 TB contract: schema
@@ -142,7 +143,7 @@ class DocSetReader:
         from sycamore_spark.data import wire as W
 
         df = (
-            self.spark.read.parquet(df_or_path)
+            read_parquet(self.spark, df_or_path)
             if isinstance(df_or_path, str)
             else df_or_path
         )

@@ -3,7 +3,9 @@
 Reference parity: the reference's scan layer (``connectors/file/file_scan.py``,
 ``reader.py``) produces row-oriented Documents; here scans are plain
 ``spark.read.parquet`` so Catalyst gets pushdown + pruning + partition
-pruning for free (SURVEY.md §2.1).
+pruning for free (SURVEY.md §2.1). Tables are read with
+``store.read_parquet``, which takes the schema from one footer on the
+driver instead of in a schema-inference job.
 """
 
 from __future__ import annotations
@@ -14,6 +16,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sycamore_spark.store import read_parquet
 
 TABLE_NAMES = (
     "region",
@@ -67,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     footer = pq.read_schema(path)
     for f in footer:
         if pa.types.is_timestamp(f.type) and f.type.unit == "ns":

@@ -24,6 +24,9 @@ store versions, or reads or writes a replay mark.
   its mark replays the batch, which those folds absorb because they are
   content-idempotent.
 - **One foreachBatch starter**, ``start_fold``.
+- **One parquet reader**, ``read_parquet``, behind every parquet read in
+  the library: it takes the schema from one footer on the driver, so a
+  read (of a store, a version or a table) runs no schema-inference job.
 
 At cluster scale the same protocol is a transactional table's commit
 (Delta/Iceberg); here it is plain parquet directories.
@@ -34,11 +37,12 @@ from __future__ import annotations
 import re
 from typing import Callable
 
-from pyspark.errors.exceptions.captured import AnalysisException
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import AnalysisException, CapturedException
 from pyspark.sql import DataFrame
 
 from sycamore_spark.materialize import (
-    _fs_exists, _fs_read_text, _fs_write_text, _hadoop_fs, delete_path,
+    _fs_exists, _fs_read_text, _fs_write_text, _hadoop_fs, delete_path, jvm_handle,
 )
 
 _COMMITTED = "_committed"
@@ -142,7 +146,7 @@ def versioned_state_fold(
         mark = read_mark(spark, state_dir, committed[-1])
         if _replayed(mark, checkpoint_dir, batch_id):
             return  # replayed batch: contribution already folded
-        old = spark.read.parquet(f"{state_dir.rstrip('/')}/v={committed[-1]}")
+        old = read_parquet(spark, f"{state_dir.rstrip('/')}/v={committed[-1]}")
     publish(
         spark, state_dir, make_merged(old).repartition(n_state_partitions),
         mark=(checkpoint_dir, batch_id),
@@ -181,15 +185,100 @@ def start_fold(
     return writer.start()
 
 
+def read_parquet(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, without its schema-inference job.
+
+    Without schema merging, Spark takes a parquet schema from one footer,
+    that of the first data file in path order, but reads it in a Spark
+    job. This reads the same footer on the driver with Spark's own code
+    (``ParquetFileReader.readFooter``, then
+    ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` over the session's conf) and hands
+    the schema to the read. Partition columns are still inferred from the
+    paths, and ``path`` may be a glob.
+
+    The plain read, with its job, runs instead:
+
+    - when there is no data file (a missing path, a glob that matches
+      nothing, a directory of hidden entries), so Spark raises exactly as
+      it would;
+    - when the footer cannot be read or holds a type Spark's converter
+      rejects, so Spark fails, or skips the file, under its own options;
+    - when the session merges schemas (``spark.sql.parquet.mergeSchema``);
+    - for a streaming file sink's output, whose files Spark takes from
+      the sink's log.
+
+    Summary files (``_metadata``, ``_common_metadata``), which Spark no
+    longer writes, are skipped like hidden ones."""
+    schema = _footer_schema(spark, path) if isinstance(path, str) else None
+    if schema is None:
+        return spark.read.parquet(path)
+    return DataFrame(spark._jsparkSession.read().schema(schema).format("parquet").load(path), spark)
+
+
+def _footer_schema(spark, path: str):
+    """The JVM StructType Spark would infer for ``path``, or None where
+    ``read_parquet`` leaves the read to Spark."""
+    state = spark._jsparkSession.sessionState()
+    conf = state.conf()
+    if conf.isParquetSchemaMergingEnabled():
+        return None
+    hconf = state.newHadoopConf()
+    Path = jvm_handle(spark, "org.apache.hadoop.fs.Path")
+    pattern = Path(path)
+    fs = pattern.getFileSystem(hconf)
+    if fs.exists(Path(pattern, "_spark_metadata")):
+        return None  # a streaming file sink: Spark lists the files its log committed
+    roots = fs.globStatus(pattern)  # None for a missing plain path
+    first = next(_data_files(fs, roots or ()), None)
+    if first is None:
+        return None
+    parquet = "org.apache.spark.sql.execution.datasources.parquet"
+    try:
+        footer = jvm_handle(spark, "org.apache.parquet.hadoop.ParquetFileReader.readFooter")(
+            hconf, first,
+            jvm_handle(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER"),
+        )
+        return jvm_handle(spark, f"{parquet}.ParquetFileFormat.readSchemaFromFooter")(
+            jvm_handle(spark, "org.apache.parquet.hadoop.Footer")(first, footer),
+            jvm_handle(spark, f"{parquet}.ParquetToSparkSchemaConverter")(conf),
+        )
+    except (Py4JJavaError, CapturedException):
+        return None  # unreadable, or a type Spark rejects: its own read raises
+
+
+def _data_files(fs, statuses, top: bool = True):
+    """The data files under ``statuses``, lazily and in the order Spark
+    sorts leaf files (by path string: a directory's files sort as its path
+    plus '/'). Hidden names are skipped as Spark's file listing skips them
+    ('.' or '_' first, unless a '_' name holds '=', or a ``._COPYING_``
+    end), except for a top-level directory, which was named by the
+    caller."""
+    entries = []
+    for st in statuses:
+        name, is_dir = st.getPath().toString(), bool(st.isDirectory())
+        base = name.rsplit("/", 1)[-1]
+        hidden = base[:1] == "." or base.endswith("._COPYING_") or (base[:1] == "_" and "=" not in base)
+        if not hidden or (top and is_dir):
+            entries.append((name + "/" if is_dir else name, st))
+    for key, st in sorted(entries, key=lambda e: e[0]):
+        if key.endswith("/"):
+            yield from _data_files(fs, fs.listStatus(st.getPath()), top=False)
+        else:
+            yield st.getPath()
+
+
 def read_store(spark, store_dir: str) -> DataFrame | None:
-    """The store at ``store_dir``, or None when it holds no data: never
-    written, or every data directory removed by a fold (Spark reports the
-    latter as UNABLE_TO_INFER_SCHEMA over a directory of hidden entries).
+    """The store at ``store_dir``, read by ``read_parquet`` (no
+    schema-inference job), or None when it holds no data: never written,
+    or every data directory removed by a fold. ``read_parquet`` leaves
+    both to Spark's own read, which reports the latter as
+    UNABLE_TO_INFER_SCHEMA over a directory of hidden entries.
     Every other failure propagates: folding into a store that exists but
     cannot be read would rebuild from the delta alone and drop the rows
     the store held."""
     try:
-        return spark.read.parquet(store_dir)
+        return read_parquet(spark, store_dir)
     except AnalysisException as e:
         cond = e.getCondition()
         if cond == "PATH_NOT_FOUND":

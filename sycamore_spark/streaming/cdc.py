@@ -104,5 +104,5 @@ def maintain_snapshot_stream(
 
 def read_snapshot(spark, state_dir: str, op_col: str = "op", delete_op: str = "D") -> DataFrame:
     """The live snapshot: tombstones and bookkeeping columns removed."""
-    df = spark.read.parquet(state_dir)
+    df = store.read_parquet(spark, state_dir)
     return df.filter(F.col(op_col) != F.lit(delete_op)).drop(_BUCKET)

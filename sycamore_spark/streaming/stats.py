@@ -34,7 +34,7 @@ def current_state_dir(spark, state_dir: str) -> str:
 
 def read_state(spark, state_dir: str) -> DataFrame:
     """The live persisted state (one row per group)."""
-    return spark.read.parquet(current_state_dir(spark, state_dir))
+    return store.read_parquet(spark, current_state_dir(spark, state_dir))
 
 
 def maintain_stats_stream(

@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sycamore_spark.store import read_parquet
+
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
                   partition_by: list[str] | None = None) -> None:
@@ -117,7 +119,7 @@ def compact_table(
     fs, p = _hadoop_fs(spark, src_dir)
     total_bytes = fs.getContentSummary(p).getLength()
     n = max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src_dir)
+    df = read_parquet(spark, src_dir)
     from pyspark.sql import functions as F  # noqa: F401  (parity with module style)
 
     out = (
@@ -167,7 +169,7 @@ def compact_partitioned_table(
             f"read runs. Write to a sibling dir and swap, or use "
             f"the lineage cut of functions.partitioning.fold_touched_buckets."
         )
-    df = spark.read.parquet(src_dir)
+    df = read_parquet(spark, src_dir)
     if files_per_partition <= 1:
         out = df.repartition(F.col(partition_col))
     else:

@@ -765,3 +765,48 @@ def test_containment_lsh_repeated_calls_add_no_caches(spark):
     assert call() == first
     assert call() == first
     assert jsc.getPersistentRDDs().size() == after_one
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_minhash_blocks_no_null_text(spark, monkeypatch, ansi):
+    """NULL-text docs get no band keys: with 300 of them beside five
+    unrelated texts the banding join makes no candidate pair at all (they
+    used to share one signature and form one quadratic block)."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "a stitch in time saves nine they always say",
+        "every cloud has a silver lining in the end",
+        "all that glitters is not gold said the merchant",
+        "fortune favours the bold and the well prepared",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)) + [(100 + i, None) for i in range(300)], "doc_id int, text string"
+    )
+    blocked = []
+    real = dedup._blocked_pairs
+
+    def recorded(*args, **kwargs):
+        blocked.append(real(*args, **kwargs))
+        return blocked[-1]
+
+    monkeypatch.setattr(dedup, "_blocked_pairs", recorded)
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        assert dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5).collect() == []
+        assert [c.count() for c in blocked] == [0]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+
+
+def test_simhash_leaves_no_signature_cache(spark):
+    """Two calls on different inputs leave no persisted frame behind: the
+    signature is not cached (both blocking sides read one exchange)."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    got = [
+        sorted(tuple(r) for r in dedup.simhash_near_dup_pairs(docs, "doc_id", "text").collect())
+        for docs in (_df(spark), _df(spark).filter(F.col("doc_id") != 2))
+    ]
+    assert got[0] and got[1] == [p for p in got[0] if 2 not in p[:2]]
+    assert jsc.getPersistentRDDs().size() == before

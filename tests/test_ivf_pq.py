@@ -726,7 +726,8 @@ def test_pq_search_job_counts_and_single_vector_plans(vec_df, spark):
     """Every PQ search runs one shared query path; its job counts on a warm,
     cached, encoded corpus are pinned. A single-vector search looks its
     LUT up in a literal map (one job), so its executed plan holds no
-    broadcast; a query frame broadcast-joins its probe table."""
+    broadcast; so does a one-row query frame (the collect, then one job);
+    a larger query frame broadcast-joins its probe table."""
     from sycamore_spark.operators.similarity import (
         ivf_pq_range_search, ivf_pq_refine_multi, ivf_pq_refine_topk,
         ivf_pq_topk_multi, pq_encode, pq_topk, pq_train,
@@ -752,13 +753,16 @@ def test_pq_search_job_counts_and_single_vector_plans(vec_df, spark):
         "ivf_pq_range_search": lambda: ivf_pq_range_search(q, enc, cents, books, 3000, nprobe=2),
         "ivf_pq_refine_topk": lambda: ivf_pq_refine_topk(q, enc, cents, books, k=5, refine=3),
     }
+    one_row = {
+        "ivf_pq_topk_multi/1": lambda: ivf_pq_topk_multi(q1, enc, cents, books, k=5),
+        "ivf_pq_refine_multi/1": lambda: ivf_pq_refine_multi(q1, enc, cents, books, k=5, refine=3),
+    }
     multi = {
         "ivf_pq_topk_multi/5": lambda: ivf_pq_topk_multi(q5, enc, cents, books, k=5),
-        "ivf_pq_topk_multi/1": lambda: ivf_pq_topk_multi(q1, enc, cents, books, k=5),
         "ivf_pq_refine_multi": lambda: ivf_pq_refine_multi(q5, enc, cents, books, k=5, refine=3),
     }
     try:
-        for want, ops in ((1, single), (4, multi)):
+        for want, ops in ((1, single), (2, one_row), (4, multi)):
             for name, op in ops.items():
                 op().collect()  # warm
 
@@ -774,6 +778,34 @@ def test_pq_search_job_counts_and_single_vector_plans(vec_df, spark):
     finally:
         enc.unpersist()
         penc.unpersist()
+
+
+@pytest.mark.parametrize("qid_type", ["bigint", "string"])
+def test_one_row_query_frame_matches_the_batch_plan(vec_df, spark, qid_type):
+    """A one-row query frame takes the literal-LUT plan and returns the
+    rows, columns and types the broadcast plan returns for the same query
+    in a larger frame, with and without a prefilter."""
+    from pyspark.sql import functions as F
+
+    from sycamore_spark.operators.similarity import ivf_pq_refine_multi, ivf_pq_topk_multi
+
+    df, X = vec_df
+    cents, books = ivf_pq_train(df, ncells=6, m=4, subk=8, seed=5)
+    enc = ivf_pq_encode(df, cents, books)
+    schema = f"query_id {qid_type}, embedding array<double>"
+    qid = 7 if qid_type == "bigint" else "q7"
+    one = spark.createDataFrame([(qid, X[3].tolist())], schema)
+    many = one.union(spark.createDataFrame([(8 if qid_type == "bigint" else "q8", X[40].tolist())], schema))
+    searches = [
+        lambda q: ivf_pq_topk_multi(q, enc, cents, books, k=6, nprobe=2),
+        lambda q: ivf_pq_topk_multi(q, enc, cents, books, k=6, nprobe=3, prefilter=F.col("vec_id") % 3 != 0),
+        lambda q: ivf_pq_refine_multi(q, enc, cents, books, k=4, refine=3, nprobe=2),
+    ]
+    for search in searches:
+        alone, batch = search(one), search(many).filter(F.col("query_id") == qid)
+        assert alone.dtypes == batch.dtypes
+        rows = sorted(batch.collect())
+        assert len(rows) > 1 and sorted(alone.collect()) == rows
 
 
 def test_malformed_query_vectors_raise_naming_the_query(vec_df, spark):

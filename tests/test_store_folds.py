@@ -134,13 +134,14 @@ def _counted_encode(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("prepared,jobs", [
-    (False, {"index": 5, "norms": 4, "ann": 5}),
-    (True, {"index": 5, "norms": 4, "ann": 5}),
+    (False, {"index": 4, "norms": 3, "ann": 4}),
+    (True, {"index": 4, "norms": 3, "ann": 4}),
 ])
 def test_fold_job_counts(spark, tmp_path, monkeypatch, prepared, jobs):
-    """Per fold: the store's schema inference, the delta probe, the
-    old-bucket collect (not for norms), the shuffle by bucket and the
-    write. The ANN upserts go through the encode's Python stage once."""
+    """Per fold: the delta probe, the old-bucket collect (not for norms),
+    the shuffle by bucket and the write; the store's schema comes from a
+    footer read on the driver, not a job. The ANN upserts go through the
+    encode's Python stage once."""
     idx, nrm, ann, X, cents, books = _stores(spark, tmp_path)
     delta = spark.createDataFrame(
         [(1, None, "D"), (4, "delta epsilon", "U"), (9, "zeta zeta", "I")], "doc_id bigint, text string, op string"
@@ -256,11 +257,16 @@ def test_emptied_bucket_delete_failure_converges_on_rerun(spark, tmp_path, monke
 
 
 def test_store_read_job_count(spark, tmp_path):
+    """A frame of two queries reads in seven jobs; one query reads in six
+    (no query-term broadcast) and gets the rows it gets in the frame."""
     docs = spark.createDataFrame(EDGE_ROWS, "doc_id bigint, text string")
     qdf = spark.createDataFrame(QUERIES, "query_id bigint, query string")
     idx, nrm = _lexical_store(spark, str(tmp_path), docs)
     rows, jobs = count_jobs(spark, lambda: bm25_from_index(spark, idx, nrm, qdf, n_buckets=NB, k=3).collect())
-    assert jobs == 10 and len(rows) == 5
+    assert jobs == 7 and len(rows) == 5
+    one = qdf.filter("query_id = 2")
+    alone, jobs = count_jobs(spark, lambda: bm25_from_index(spark, idx, nrm, one, n_buckets=NB, k=3).collect())
+    assert jobs == 6 and sorted(alone) == sorted(r for r in rows if r.query_id == 2)
 
 
 # -- atomic pointer writes -----------------------------------------------------
