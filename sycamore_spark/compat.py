@@ -1,4 +1,5 @@
-"""Spark feature probes: make version requirements explicit.
+"""Spark feature probes (make version requirements explicit), and the
+Python worker start-up fix (below).
 
 The engine targets Spark 4.x but most of the surface runs on 3.5; the
 exceptions are probed HERE, at one choke point, so an older cluster gets
@@ -27,9 +28,31 @@ Use::
     if compat.has("variant"): ...    # branch
 
 Tests force flags off via ``compat._OVERRIDES`` to pin the error paths.
+
+Python worker start-up
+----------------------
+
+pyspark's worker ends every task's file setup with
+``importlib.invalidate_caches()``. On CPython 3.11 a zipimporter's
+``invalidate_caches`` re-reads its archive's whole central directory, and a
+worker caches one zipimporter per package path inside the archives Spark
+puts on its ``PYTHONPATH`` (``pyspark.zip``, the py4j zip, the spark-core
+jar): 16 of them, 150-250 ms of every task before it runs any code.
+``skip_spark_archive_rereads`` (run when the package is imported) puts a
+finder first on ``sys.meta_path`` whose ``invalidate_caches`` removes those
+importers from ``sys.path_importer_cache`` just before ``PathFinder`` would
+re-read them. Imports still work: a new zipimporter takes the directory
+from zipimport's module cache. Spark's archives do not change while an
+application runs. Archives shipped with ``addPyFile`` are on ``sys.path``,
+not ``PYTHONPATH``, so their importers are kept and still re-read on every
+task.
 """
 
 from __future__ import annotations
+
+import os
+import sys
+import zipimport
 
 _MIN_VERSIONS = {
     "variant": "4.0",
@@ -87,3 +110,29 @@ def require(feature: str) -> None:
             f"(running pyspark {pyspark.__version__}). "
             "See sycamore_spark/compat.py for the feature matrix."
         )
+
+
+def _drop_spark_archive_importers() -> None:
+    archives = {os.path.abspath(p) for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if os.path.isfile(p)}
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and os.path.abspath(finder.archive) in archives:
+            sys.path_importer_cache.pop(path, None)
+
+
+class _SparkArchiveImporterDrop:
+    """A meta path finder that finds nothing; ``importlib.invalidate_caches``
+    calls it before ``PathFinder``, which is where the re-reads happen."""
+
+    @staticmethod
+    def find_spec(name, path=None, target=None):
+        return None
+
+    invalidate_caches = staticmethod(_drop_spark_archive_importers)
+
+
+def skip_spark_archive_rereads() -> None:
+    """Stop ``importlib.invalidate_caches()`` re-reading the archives on
+    ``PYTHONPATH`` (see "Python worker start-up" above). Idempotent;
+    forked processes inherit it."""
+    if _SparkArchiveImporterDrop not in sys.meta_path:
+        sys.meta_path.insert(0, _SparkArchiveImporterDrop)

@@ -7,10 +7,14 @@ expensive, and this module replaces both:
 - ``spark.createDataFrame(<python list>)`` is a pickled ``parallelize``
   RDD. Spark can read it only through a Python worker per partition
   (pyspark re-serializes the rows through a Python ``map``), which costs
-  hundreds of ms per job even for one row. ``local_frame`` converts the
-  rows to Arrow on the driver and hands the table to Spark 4's
-  ``createDataFrame(pyarrow.Table)``: the result is a JVM
-  ``LocalRelation`` (a JVM-side RDD above
+  a Python task per job even for one row. Most of such a task used to be
+  the worker's start-up, which re-read Spark's archives on every task
+  (``compat.py``, "Python worker start-up"). Since the package stops
+  those re-reads, a one-row frame's ``collect_bounded`` takes a median
+  293 ms instead of 494 ms (``local[4]`` on a 4-core host, warm worker
+  daemon). ``local_frame`` converts the rows to Arrow on the driver and
+  hands the table to Spark 4's ``createDataFrame(pyarrow.Table)``: the
+  result is a JVM ``LocalRelation`` (a JVM-side RDD above
   ``spark.sql.execution.arrow.localRelationThreshold``). Catalyst sees its
   size, so it broadcasts, and collecting it runs no job.
 - ``df.limit(n).collect()`` plans a ``CollectLimit``, which scans

@@ -406,8 +406,10 @@ def simhash_near_dup_pairs(
     mask = (1 << width) - 1
     # no cache: both sides of the blocking join read one exchange of the
     # chunk rows (AQE reuses it), so the vote still runs once per row and
-    # no corpus-sized cache outlives the call
-    sig = simhash(df, id_col, text_col, nbits, hash_fn=hash_fn)
+    # no corpus-sized cache outlives the call. NULL text has no items
+    # (``_item_set``), so it gets no chunk keys; as simhash 0 every two
+    # NULL-text docs would pair at hamming 0.
+    sig = simhash(df.filter(F.col(text_col).isNotNull()), id_col, text_col, nbits, hash_fn=hash_fn)
     chunk_structs = F.array(*[
         F.struct(
             F.lit(ci).alias("ci"),

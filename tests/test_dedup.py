@@ -723,7 +723,8 @@ def test_instruction_pool_filter_degenerate_fragments(spark):
 def test_null_text_is_never_a_duplicate(spark, ansi):
     """NULL text has no items, so no pair operator pairs it and uniquify
     keeps every NULL-text doc. With ANSI off ``size(NULL)`` is -1, and two
-    NULL shingle sets scored -1/-1 = 1.0."""
+    NULL shingle sets scored -1/-1 = 1.0; two NULL texts had simhash 0 and
+    paired at hamming 0."""
     with_nulls = spark.createDataFrame(DOCS + [(6, None), (7, None)], "doc_id int, text string")
 
     def pairs(docs):
@@ -734,6 +735,7 @@ def test_null_text_is_never_a_duplicate(spark, ansi):
                 dedup.jaccard_similar_pairs(docs, "doc_id", "text", threshold=0.5, ngram=2),
                 dedup.containment_pairs(docs, "doc_id", "text", threshold=0.5, ngram=2),
                 dedup.containment_lsh_pairs(docs, "doc_id", "text", threshold=0.8, ngram=2),
+                dedup.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=3),
             )
         ]
 
